@@ -22,7 +22,8 @@ from pyspark.sql import SparkSession  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 
 BENCH_QUERIES = [
     "q01_pricing_summary",   # scan-heavy aggregate (TPC-H Q1 shape)

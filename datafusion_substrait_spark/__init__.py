@@ -7,10 +7,11 @@ Public API (≡ src/lib.rs:1-3 exposing consumer/producer/serializer):
 
     from datafusion_substrait_spark import (
         to_substrait_plan, from_substrait_plan, serialize, deserialize,
+        to_sql,
     )
 """
 
-from datafusion_substrait_spark.plans.consumer import from_substrait_plan
+from datafusion_substrait_spark.plans.consumer import from_substrait_plan, to_sql
 from datafusion_substrait_spark.plans.producer import to_substrait_plan
 from datafusion_substrait_spark.plans.proto import SubstraitError
 from datafusion_substrait_spark.plans.serializer import (
@@ -25,5 +26,6 @@ __all__ = [
     "from_substrait_plan",
     "roundtrip",
     "serialize",
+    "to_sql",
     "to_substrait_plan",
 ]

@@ -1,22 +1,37 @@
-"""Consumer: Substrait-shaped plan → executable Spark DataFrame.
+"""Consumer: Substrait-shaped plan → one Spark SQL statement → DataFrame.
 
-≡ ``from_substrait_plan`` (consumer.rs:74-112). Pure public PySpark: catalog
-lookup via ``spark.table`` (≡ ctx.table, consumer.rs:339), then
-``.select/.filter/.offset/.limit/.orderBy/.groupBy().agg/.join/.distinct``
-per rel kind. The resulting DataFrame goes through Catalyst's
-analyzer+optimizer on action — the analogue of the reference feeding consumer
-output to ``ctx.optimize`` (tests/roundtrip.rs:253).
+≡ ``from_substrait_plan`` (consumer.rs:74-112). The reference rebuilds each
+rel in-process through DataFusion's ``LogicalPlanBuilder``; here the whole
+plan is compiled, in a pure-Python walk, into ONE Spark SQL statement that
+``spark.sql`` parses and analyzes in a single call — the engine gets the
+whole operator tree at once instead of one analyzed Dataset call (and one
+py4j round trip, or Connect RPC) per rel and per Column. Catalog lookup is
+the statement's own table references (≡ ctx.table, consumer.rs:339), and the
+result goes through Catalyst's analyzer+optimizer like any query — the
+analogue of the reference feeding consumer output to ``ctx.optimize``
+(tests/roundtrip.rs:253). ``to_sql(plan)`` returns the statement, so the
+consumed plan can be read before it runs.
 
 Ordinal discipline: Substrait references columns positionally
-(consumer.rs:455-458 does ordinal→name via the input schema). We keep the
-invariant that every consumed DataFrame's columns are named ``f0..fn-1`` in
-Substrait ordinal order, so ordinal *i* is always ``F.col(f"f{i}")``; the
-user-visible names are restored at the root from ``RelRoot.names``
-(which the reference *ignores* on consume, consumer.rs:100-102 — we honor
-them, the friendlier choice, since Spark resolves by name not ordinal).
-Join inputs are alias-qualified (``__sl``/``__sr``) before condition
-resolution — our analogue of DataFusion's ``build_join_schema`` combined
-ordinal space (consumer.rs:288-290).
+(consumer.rs:455-458 does ordinal→name via the input schema). Every rel
+compiles to a SELECT whose columns are named ``f0..fn-1`` in Substrait
+ordinal order, so ordinal *i* is always ``f{i}``; a rel's width comes from
+the plan itself, never from a schema fetch. A zero-width rel carries one
+placeholder column (``__z``, a constant), which is semantically inert for
+every relational operator. The user-visible names are restored at the root
+from ``RelRoot.names`` (which the reference *ignores* on consume,
+consumer.rs:100-102 — we honor them, the friendlier choice, since Spark
+resolves by name not ordinal). Join inputs are alias-qualified
+(``__sl``/``__sr``) — our analogue of DataFusion's ``build_join_schema``
+combined ordinal space (consumer.rs:288-290).
+
+Only these shapes touch the session while compiling: a ReadRel without
+``baseSchema.names`` (one ``spark.table(...).columns`` each), a window rel
+with sum/avg DISTINCT (one schema probe for the argument types), a SampleRel
+SQL cannot spell exactly (the sampled subtree is spliced in through
+``spark.sql``'s DataFrame keyword form), and a failed analysis, which is
+probed to re-raise the named error for a stale base schema or an ExpandRel
+branch-type conflict.
 """
 
 from __future__ import annotations
@@ -24,11 +39,13 @@ from __future__ import annotations
 import base64
 import datetime
 import decimal
+import json
+import math
 import warnings
-from functools import reduce
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_substrait_spark.functions import ops
 from datafusion_substrait_spark.plans import proto
@@ -37,35 +54,58 @@ from datafusion_substrait_spark.plans.types import substrait_type_to_spark
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
 
-# substrait agg name → Spark SQL function name, for the F.expr fallback used
-# by DISTINCT invocations without a native builder (e.g. avg DISTINCT)
-_AGG_SQL_NAME = {
-    "avg": "avg", "mean": "avg", "median": "median", "count": "count",
-    "sum": "sum", "min": "min", "max": "max",
-    "approx_distinct": "approx_count_distinct", "array_agg": "collect_list",
-    "var": "var_samp", "variance": "var_samp", "var_pop": "var_pop",
-    "stddev": "stddev_samp", "stddev_samp": "stddev_samp",
-    "stddev_pop": "stddev_pop",
-}
+# placeholder column of a zero-width rel (SQL cannot spell an empty select)
+_EMPTY = "__z"
 
 
 def from_substrait_plan(spark: SparkSession, plan: dict) -> DataFrame:
-    root, names = proto.root_of(plan)
-    consumer = _Consumer(spark, proto.extension_map(plan),
-                         relations=plan.get("relations", []))
-    df = consumer.rel(root)
-    if names:
-        if len(names) != len(df.columns):
-            raise SubstraitError(
-                f"RelRoot.names has {len(names)} names but plan yields "
-                f"{len(df.columns)} columns"
-            )
-        df = df.toDF(*names)
-    return df
+    consumer = _Consumer(spark, plan)
+    try:
+        df = consumer.run(consumer.statement())
+    except AnalysisException as exc:
+        consumer.explain_failure(exc)
+        raise
+    return df.drop(_EMPTY) if consumer.width == 0 else df
+
+
+def to_sql(plan: dict, spark: SparkSession | None = None) -> str:
+    """The Spark SQL statement ``from_substrait_plan`` runs for ``plan``.
+
+    Most plans compile without a session; the few shapes listed in the
+    module docstring use ``spark`` (default: the active session). A plan
+    with a spliced DataFrame shows it as a ``{__dfN}`` keyword reference,
+    with literal braces doubled, as ``spark.sql`` receives it."""
+    return _Consumer(spark, plan).statement()
+
+
+class _Rel(NamedTuple):
+    sql: str    # a query whose columns are f0..f{width-1} (or __z)
+    width: int
+
+
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str(s: str) -> str:
+    # NUL is escaped too, so it can mark spliced-DataFrame references
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") \
+        .replace("\x00", "\\u0000") + "'"
 
 
 def _fnames(n: int) -> list[str]:
     return [f"f{i}" for i in range(n)]
+
+
+def _select(items: list[str], src: str, tail: str = "", hint: str = "",
+            distinct: bool = False) -> str:
+    head = "SELECT DISTINCT" if distinct else "SELECT"
+    return (f"{head} {hint}{', '.join(items) or f'1 AS {_EMPTY}'} "
+            f"FROM {src}{tail}")
+
+
+def _over(sql: str) -> str:
+    return f"({sql}) AS __t"
 
 
 def _mask_ordinals(body: dict, width: int, what: str) -> list[int] | None:
@@ -85,56 +125,42 @@ def _mask_ordinals(body: dict, width: int, what: str) -> list[int] | None:
 
 
 class _Consumer:
-    def __init__(self, spark: SparkSession, extensions: dict[int, str],
-                 relations: list[dict] | None = None) -> None:
+    def __init__(self, spark: SparkSession | None, plan: dict) -> None:
         self.spark = spark
-        self.extensions = extensions  # anchor → name (consumer.rs:76-91)
-        # ReferenceRel targets (r12): the plan's relation entries, plus a
-        # per-ordinal DataFrame cache (DAG reuse consumes each shared
-        # subtree once) and an in-progress set (cycle fence)
-        self._relations = relations or []
-        self._ref_cache: dict[int, DataFrame] = {}
+        self.extensions = proto.extension_map(plan)  # anchor → name (consumer.rs:76-91)
+        self._root, self._names = proto.root_of(plan)
+        self.width: int | None = None
+        # ReferenceRel targets (r12): the plan's relation entries, each
+        # compiled once into a CTE (DAG reuse), plus an in-progress set
+        # (cycle fence)
+        self._relations = plan.get("relations", [])
+        self._refs: dict[int, _Rel] = {}
+        self._ctes: list[str] = []
         self._ref_in_progress: set[int] = set()
+        # DataFrames spliced in through spark.sql's keyword form
+        self._frames: dict[str, DataFrame] = {}
+        # what explain_failure probes: named reads with a base schema, and
+        # ExpandRel branch queries
+        self._reads: list[tuple[list[str], list[str]]] = []
+        self._expands: list[list[str]] = []
         # canonical-JSON of a scalar-subquery expr → attached column name,
         # scoped to the project/filter currently being consumed
         self._sq_map: dict[str, str] = {}
-        # lambda frames (r10): the bound Columns of the lambda currently
-        # being consumed, innermost last — lambda_var(depth, index) resolves
-        # against this stack
-        self._lambda_stack: list[list[Column]] = []
-        # r18 (guide §4 driver boundary): one unresolved Column per f-name,
-        # shared across every single-input rel of this consume. The f0..fn-1
-        # invariant makes the name unambiguous within any one input, and
-        # ``df[name]`` costs a py4j round trip (plus a deferred delete) per
-        # reference for the same resolution — only joins need qualified
-        # resolution and they build their own __sl/__sr columns.
-        self._fcols: dict[int, Column] = {}
-        self._lit_cache: dict[tuple, Column] = {}
+        # lambda frames (r10): the parameter names of the lambdas currently
+        # being consumed, innermost last — lambda_var(depth, index)
+        # resolves against this stack
+        self._lambda_stack: list[list[str]] = []
+        self._n_lambda_vars = 0
 
-    def _fcol(self, i: int) -> Column:
-        c = self._fcols.get(i)
-        if c is None:
-            c = self._fcols[i] = F.col(f"f{int(i)}")
-        return c
-
-    # literal kinds whose Column build is a pure function of (kind, value)
-    # over a hashable scalar — safe to share one Column per distinct value
-    # within a consume (r18; F.lit + cast is 2-4 round trips per call and
-    # plans repeat small literals heavily)
-    _CACHEABLE_LITS = frozenset(
-        ["boolean", "i8", "i16", "i32", "i64", "fp32", "fp64", "string",
-         "date"])
-
-    def _literal_cached(self, body: dict) -> Column:
-        kinds = [k for k in body if k != "nullable"]
-        if len(kinds) == 1 and kinds[0] in self._CACHEABLE_LITS \
-                and not isinstance(body[kinds[0]], (dict, list)):
-            key = (kinds[0], body[kinds[0]])
-            c = self._lit_cache.get(key)
-            if c is None:
-                c = self._lit_cache[key] = _literal_column(body)
-            return c
-        return _literal_column(body)
+    def _session(self) -> SparkSession:
+        if self.spark is None:
+            self.spark = SparkSession.getActiveSession()
+            if self.spark is None:
+                raise SubstraitError(
+                    "this plan needs a Spark session to compile (a read "
+                    "without baseSchema names, a sum/avg DISTINCT window or "
+                    "a sample SQL cannot spell); pass spark=")
+        return self.spark
 
     def _fn_name(self, anchor: int) -> str:
         name = self.extensions.get(int(anchor))
@@ -143,9 +169,84 @@ class _Consumer:
                                  "(≡ consumer.rs:536-541)")
         return name
 
+    # -- statement ----------------------------------------------------------
+
+    def statement(self) -> str:
+        root = self.rel(self._root)
+        names = self._names
+        body = root.sql
+        if names:
+            if len(names) != root.width:
+                raise SubstraitError(
+                    f"RelRoot.names has {len(names)} names but plan yields "
+                    f"{root.width} columns"
+                )
+            body = _select([f"f{i} AS {_q(n)}" for i, n in enumerate(names)],
+                           "(" + body + ") AS __root")
+        self.width = root.width
+        return self._runnable(body)
+
+    def _runnable(self, sql: str) -> str:
+        """``sql`` with the CTEs compiled so far, in the form spark.sql
+        takes: spliced-DataFrame marks become ``{name}`` keyword references
+        and literal braces are doubled."""
+        if self._ctes:
+            sql = f"WITH {', '.join(self._ctes)} {sql}"
+        if not self._frames:
+            return sql
+        sql = sql.replace("{", "{{").replace("}", "}}")
+        for name in self._frames:
+            sql = sql.replace(f"\x00{name}\x00", f"{{{name}}}")
+        return sql
+
+    def run(self, stmt: str) -> DataFrame:
+        return self._session().sql(stmt, **self._frames)
+
+    def _probe(self, sql: str) -> DataFrame:
+        return self.run(self._runnable(sql))
+
+    def explain_failure(self, exc: AnalysisException) -> None:
+        """After ``spark.sql`` failed analysis: raise the named error the
+        failure stands for, when it is one of ours; otherwise return and
+        let the caller re-raise ``exc`` unchanged."""
+        spark = self._session()
+        for names, base in self._reads:
+            try:
+                live = spark.table(".".join(names)).columns
+            except AnalysisException:
+                continue
+            missing = [n for n in base if n not in set(live)]
+            if missing:
+                raise SubstraitError(
+                    f"table {'.'.join(names)}: plan baseSchema columns "
+                    f"{missing} no longer exist (live schema: {live})"
+                ) from exc
+        for branches in self._expands:
+            # ADVICE r12: switching duplicates whose expressions disagree
+            # INCOMPATIBLY on type across branches would otherwise surface
+            # as a raw union AnalysisException with no Substrait context.
+            # Legal widenings (i32 null vs i64 key in grouping-set shapes)
+            # are Spark's own union coercions and pass.
+            try:
+                types = [[f.dataType.simpleString()
+                          for f in self._probe(b).schema.fields]
+                         for b in branches]
+            except AnalysisException:
+                continue
+            union = branches[0]
+            for d, b in enumerate(branches[1:], start=1):
+                union = f"({union}) UNION ALL ({b})"
+                try:
+                    self._probe(union)
+                except AnalysisException:
+                    raise SubstraitError(
+                        "ExpandRel duplicate branches disagree on output "
+                        f"types: branch 0 yields {types[0]}, branch {d} "
+                        f"yields {types[d]}") from exc
+
     # -- relations ----------------------------------------------------------
 
-    def rel(self, rel: dict) -> DataFrame:
+    def rel(self, rel: dict) -> _Rel:
         kind = proto.rel_kind(rel)
         body = rel[kind]
         # spec asymmetry (r11 for JoinRel, generalized r12 to every rel
@@ -166,112 +267,115 @@ class _Consumer:
         if mapping is None:
             return getattr(self, f"_rel_{kind}")(body)
         # RelCommon.emit (r11): spec-conformant foreign producers remap a
-        # rel's output through emit.outputMapping; before r11 this field was
-        # silently ignored — the one remaining silent-wrong-answer path
-        # (VERDICT r10 §missing #1). The ordinal space is the rel's direct
-        # output for every kind EXCEPT ProjectRel, where the spec defines it
-        # as input ++ expressions (the reference's direct convention — the
-        # expressions ARE the output row, consumer.rs:122-137 — stays the
-        # default when emit is absent).
+        # rel's output through emit.outputMapping. The ordinal space is the
+        # rel's direct output for every kind EXCEPT ProjectRel, where the
+        # spec defines it as input ++ expressions (the reference's direct
+        # convention — the expressions ARE the output row,
+        # consumer.rs:122-137 — stays the default when emit is absent).
         if kind == "project":
-            df = self._project_emit_space(body)
+            r = self._project(body, emit_space=True)
         else:
-            df = getattr(self, f"_rel_{kind}")(body)
-        width = len(df.columns)
-        bad = [m for m in mapping if m < 0 or m >= width]
+            r = getattr(self, f"_rel_{kind}")(body)
+        bad = [m for m in mapping if m < 0 or m >= r.width]
         if bad:
             raise SubstraitError(
                 f"{kind} emit.outputMapping ordinals {bad} outside the "
-                f"rel's emit space of width {width}"
+                f"rel's emit space of width {r.width}"
             )
         # trailing ordinal remap; duplicates are spec-legal (a column may be
         # emitted more than once), so plain positional selection, no dedup
-        return df.select(*[self._fcol(m).alias(f"f{j}")
-                           for j, m in enumerate(mapping)])
+        return _Rel(_select([f"f{m} AS f{j}" for j, m in enumerate(mapping)],
+                            _over(r.sql)), len(mapping))
 
-    def _project_emit_space(self, body: dict) -> DataFrame:
-        """ProjectRel intermediate under RelCommon.emit: the SPEC ordinal
-        space — input columns ++ expression columns (Substrait algebra.md
-        ProjectRel "emit order: input ++ expressions"). Only reached when
-        emit is present; direct-emit ProjectRels keep the reference's
-        expressions-are-the-output convention via ``_rel_project``."""
-        df = self.rel(body["input"])
-        n_in = len(df.columns)
+    @staticmethod
+    def _fields(width: int):
+        """Resolver of input ordinals for a single-input rel."""
+        def resolve(i: int) -> str:
+            if not 0 <= i < width:
+                raise SubstraitError(
+                    f"field reference ordinal {i} outside the input width "
+                    f"{width}")
+            return f"f{i}"
+        return resolve
+
+    def _rel_project(self, body: dict) -> _Rel:
+        return self._project(body, emit_space=False)
+
+    def _project(self, body: dict, emit_space: bool) -> _Rel:
+        """Under RelCommon.emit the output is the SPEC ordinal space — input
+        columns ++ expression columns (Substrait algebra.md ProjectRel "emit
+        order: input ++ expressions"); without it the expressions are the
+        output, the reference's convention."""
+        inp = self.rel(body["input"])
         exprs = body.get("expressions", [])
-        df, prev = self._attach_scalar_subqueries(df, exprs)
+        src, hint, prev = self._attach_scalar_subqueries(inp, exprs)
         try:
-            out = [self.rex(e, self._fcol) for e in exprs]
+            out = [self.rex(e, self._fields(inp.width)) for e in exprs]
         finally:
             self._sq_map = prev
-        # passthrough input columns first (attached scalar-subquery helper
-        # columns are NOT part of the ordinal space and are dropped here)
-        return df.select(*[self._fcol(i) for i in range(n_in)],
-                         *[c.alias(f"f{n_in + j}") for j, c in enumerate(out)])
+        # attached scalar-subquery helper columns are NOT part of the
+        # ordinal space and are not selected
+        first = _fnames(inp.width) if emit_space else []
+        return _Rel(_select(first + [f"{c} AS f{len(first) + j}"
+                                     for j, c in enumerate(out)],
+                            src, hint=hint), len(first) + len(out))
 
-    def _rel_read(self, body: dict) -> DataFrame:
+    def _rel_read(self, body: dict) -> _Rel:
         if "virtualTable" in body:
             return self._read_virtual(body)
         names = body["namedTable"]["names"]  # 1-3 part (consumer.rs:320-338)
-        df = self.spark.table(".".join(names))
+        table = ".".join(_q(n) for n in names)
         # resolve mask ordinals via baseSchema NAMES, not live positions: if
         # the table schema changed between produce and consume (column added/
         # reordered), positional selection silently reads wrong columns. A
-        # name recorded in the plan but gone from the table is an error.
+        # name recorded in the plan but gone from the table is an error: the
+        # inner select names every base column, so analysis fails on it and
+        # explain_failure names it.
         base = body.get("baseSchema", {}).get("names") or []
         if base:
-            live = set(df.columns)
-            missing = [n for n in base if n not in live]
-            if missing:
-                raise SubstraitError(
-                    f"table {'.'.join(names)}: plan baseSchema columns "
-                    f"{missing} no longer exist (live schema: {df.columns})"
-                )
-        source = base or df.columns
+            self._reads.append((names, base))
+            source = list(base)
+            src = (f"(SELECT {', '.join(_q(c) for c in base)} FROM {table})"
+                   " AS __b")
+        else:
+            source = self._session().table(".".join(names)).columns
+            src = f"{table} AS __b"
         # ReadRel.filter / best_effort_filter (r11): spec-conformant foreign
         # producers (DuckDB's substrait extension pushes scan predicates
         # here) express both against the BASE schema, before the projection
         # mask. `filter` is mandatory — ignoring it returns wrong rows
-        # silently (the same failure class as the pre-r11 emit gap);
-        # `best_effort_filter` may be applied partially or fully, and
-        # applying it fully is always sound (the plan's exact FilterRel
+        # silently; `best_effort_filter` may be applied partially or fully,
+        # and applying it fully is always sound (the plan's exact FilterRel
         # above re-checks) and lets Catalyst push it into the scan.
-        df = self._read_filters(body, df, source)
+        where = self._read_filters(body, [_q(c) for c in source])
         mask = _mask_ordinals(body, len(source), f"table {'.'.join(names)}")
-        picked = [source[i] for i in mask] if mask is not None else list(source)
-        # alias to the ordinal names in the SAME select: classic Dataset ops
-        # analyze eagerly, so a separate toDF rename would cost one extra
-        # Catalyst analysis pass over the subtree per plan node
-        return df.select(*[df[c].alias(f"f{j}") for j, c in enumerate(picked)])
+        picked = [source[i] for i in mask] if mask is not None else source
+        return _Rel(_select([f"{_q(c)} AS f{j}" for j, c in enumerate(picked)],
+                            src, where), len(picked))
 
-    def _read_filters(self, body: dict, df: DataFrame,
-                      cols: list[str]) -> DataFrame:
+    def _read_filters(self, body: dict, cols: list[str]) -> str:
         # bounds-checked resolver (review catch r11): a bare python index
         # would silently resolve a negative ordinal from the END of the
         # base schema and die with a raw IndexError past it — the same
         # hazard _mask_ordinals guards
-        def resolver(i: int) -> Column:
+        def resolver(i: int) -> str:
             i = int(i)
             if i < 0 or i >= len(cols):
                 raise SubstraitError(
                     f"ReadRel filter ordinal {i} outside base schema "
                     f"width {len(cols)}")
-            return df[cols[i]]
+            return cols[i]
 
-        for key in ("filter", "bestEffortFilter"):
-            cond = body.get(key)
-            if cond is not None:
-                df = df.filter(self.rex(cond, resolver))
-        return df
+        conds = [self.rex(body[key], resolver)
+                 for key in ("filter", "bestEffortFilter") if key in body]
+        return " WHERE " + " AND ".join(conds) if conds else ""
 
-    def _read_virtual(self, body: dict) -> DataFrame:
-        """ReadRel{virtualTable} → ``spark.createDataFrame`` over the inline
-        literal rows (Substrait spec read_type; spec-superset — the
-        reference reads only NamedTable, consumer.rs:371-373). The typical
-        payload is tiny (an optimizer-emptied branch, a VALUES list), so an
-        inline local DataFrame is the right physical shape — Spark plans it
-        as a LocalTableScan, no files, no shuffle."""
-        from pyspark.sql import types as T
-
+    def _read_virtual(self, body: dict) -> _Rel:
+        """ReadRel{virtualTable} → an inline ``VALUES`` table of the literal
+        rows, each value cast to its baseSchema type (Substrait spec
+        read_type; spec-superset — the reference reads only NamedTable,
+        consumer.rs:371-373). Spark plans it as a LocalTableScan: no
+        files, no shuffle."""
         struct = body.get("baseSchema", {}).get("struct", {})
         types = struct.get("types")
         names = body.get("baseSchema", {}).get("names")
@@ -281,18 +385,13 @@ class _Consumer:
                 "virtual table with columns requires baseSchema struct types"
             )
         if names and types is not None and len(names) != len(types):
-            # without this fence a names/types length mismatch builds the
-            # schema from types but validates rows against len(names),
-            # surfacing later as an opaque createDataFrame error
+            # without this fence a names/types length mismatch would build
+            # the columns from types but validate rows against len(names)
             raise SubstraitError(
                 f"virtual table baseSchema has {len(names)} names but "
                 f"{len(types)} struct types"
             )
-        ddl_types = [substrait_type_to_spark(t) for t in (types or [])]
-        schema = T.StructType([
-            T.StructField(f"f{i}", T._parse_datatype_string(dt), True)
-            for i, dt in enumerate(ddl_types)
-        ])
+        ddl = [substrait_type_to_spark(t) for t in (types or [])]
         rows = []
         for v in body["virtualTable"].get("values", []):
             fields = v.get("fields", [])
@@ -301,59 +400,55 @@ class _Consumer:
                     f"virtual table row has {len(fields)} fields, "
                     f"baseSchema has {n_cols} columns"
                 )
-            rows.append(tuple(_literal_py(f) for f in fields))
-        df = self.spark.createDataFrame(rows, schema)
-        df = self._read_filters(body, df, [f"f{i}" for i in range(n_cols)])
+            vals = [f"CAST({_virtual_literal(f)} "
+                    f"AS {t})" for f, t in zip(fields, ddl)]
+            rows.append(f"({', '.join(vals) or '1'})")
+        cols = ", ".join(_fnames(n_cols)) or _EMPTY
+        if not rows:
+            src = (f"(SELECT {', '.join(f'CAST(NULL AS {t}) AS f{i}' for i, t in enumerate(ddl)) or f'1 AS {_EMPTY}'}"
+                   " WHERE false) AS __v")
+        elif not n_cols and len(rows) == 1:
+            src = f"(SELECT 1 AS {_EMPTY}) AS __v"  # a bare SELECT's one row
+        else:
+            src = f"VALUES {', '.join(rows)} AS __v({cols})"
+        where = self._read_filters(body, _fnames(n_cols))
         mask = _mask_ordinals(body, n_cols, "virtual table")
-        if mask is not None:
-            df = df.select(*[df[f"f{i}"].alias(f"f{j}")
-                             for j, i in enumerate(mask)])
-        return df
+        picked = mask if mask is not None else range(n_cols)
+        return _Rel(_select([f"f{i} AS f{j}" for j, i in enumerate(picked)],
+                            src, where), len(picked))
 
-    def _rel_project(self, body: dict) -> DataFrame:
-        df = self.rel(body["input"])
-        exprs = body.get("expressions", [])
-        df, prev = self._attach_scalar_subqueries(df, exprs)
+    def _rel_filter(self, body: dict) -> _Rel:
+        inp = self.rel(body["input"])
+        src, hint, prev = self._attach_scalar_subqueries(
+            inp, [body["condition"]])
         try:
-            out = [self.rex(e, self._fcol) for e in exprs]
+            cond = self.rex(body["condition"], self._fields(inp.width))
         finally:
             self._sq_map = prev
-        return df.select(*[c.alias(f"f{j}") for j, c in enumerate(out)])
+        return _Rel(_select(_fnames(inp.width), src, f" WHERE {cond}", hint),
+                    inp.width)
 
-    def _rel_filter(self, body: dict) -> DataFrame:
-        df = self.rel(body["input"])
-        n = len(df.columns)
-        df, prev = self._attach_scalar_subqueries(df, [body["condition"]])
-        try:
-            cond = self.rex(body["condition"], self._fcol)
-        finally:
-            self._sq_map = prev
-        out = df.filter(cond)
-        if len(out.columns) > n:  # drop attached __sq columns
-            out = out.select(*_fnames(n))
-        return out
-
-    def _attach_scalar_subqueries(self, df: DataFrame, exprs) -> tuple[DataFrame, dict]:
-        """Cross-join each scalar subquery's result (broadcast) onto the
-        input so enclosing expressions reference it as a plain column —
-        fully lazy, no driver-side evaluation at consume time.
+    def _attach_scalar_subqueries(self, inp: _Rel, exprs) \
+            -> tuple[str, str, dict]:
+        """FROM clause of ``inp`` with each scalar subquery's result
+        cross-joined on (broadcast), so enclosing expressions reference it
+        as a plain column ``__sqN`` — fully lazy, no driver-side evaluation.
 
         SQL scalar-subquery semantics are enforced by collapsing the
         subquery through an ungrouped aggregate, which ALWAYS yields exactly
         one row: an empty result becomes NULL (a bare cross join would drop
         every outer row), and a multi-row result raises at execution via
         ``assert_true`` (a bare cross join would silently multiply outer
-        rows). The ``limit(2)`` bounds the work the guard can ever do.
+        rows). The ``LIMIT 2`` bounds the work the guard can ever do.
+        Returns (from clause, select hint, previous subquery map).
         """
-        import json as _json
-
         found: list[tuple[str, dict]] = []
         seen: set[str] = set()
 
         def scan(e):
             if isinstance(e, dict):
                 if "subquery" in e:
-                    key = _json.dumps(e, sort_keys=True)
+                    key = json.dumps(e, sort_keys=True)
                     if key not in seen:
                         seen.add(key)
                         found.append((key, e))
@@ -367,34 +462,35 @@ class _Consumer:
         scan(exprs)
         prev = self._sq_map
         self._sq_map = {}
+        src = _over(inp.sql)
+        tables = []
         for n, (key, e) in enumerate(found):
             sub = self.rel(e["subquery"]["scalar"]["input"])
+            if sub.width != 1:
+                raise SubstraitError(
+                    f"scalar subquery must yield exactly one column, got "
+                    f"{sub.width}")
             name = f"__sq{n}"
-            one = sub.toDF(name).limit(2).agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.first(name).alias(name),
-            ).select(
-                F.when(
-                    F.assert_true(
-                        F.col("__n") <= 1,
-                        F.lit("scalar subquery returned more than one row"),
-                    ).isNull(),
-                    F.col(name),
-                ).alias(name)
-            )
-            df = df.crossJoin(F.broadcast(one))
+            rows = f"SELECT f0 AS {name} FROM {_over(sub.sql)} LIMIT 2"
+            agg = (f"SELECT count(1) AS __n, first({name}) AS {name} "
+                   f"FROM {_over(rows)}")
+            one = ("SELECT CASE WHEN assert_true(__n <= 1, "
+                   "'scalar subquery returned more than one row') IS NULL "
+                   f"THEN {name} END AS {name} FROM {_over(agg)}")
+            src += f" CROSS JOIN ({one}) AS __sqt{n}"
+            tables.append(f"__sqt{n}")
             self._sq_map[key] = name
-        return df, prev
+        hint = f"/*+ BROADCAST({', '.join(tables)}) */ " if tables else ""
+        return src, hint, prev
 
-    def _rel_fetch(self, body: dict) -> DataFrame:
-        df = self.rel(body["input"])
+    def _rel_fetch(self, body: dict) -> _Rel:
+        inp = self.rel(body["input"])
         offset = int(body.get("offset", 0))
         count = int(body.get("count", proto.NO_LIMIT))
         # newer-spec expression bounds (r12): foreign producers may carry
         # LIMIT/OFFSET as Expressions — the LITERAL forms (how every SQL
-        # frontend writes them) rebuild exactly; dynamic expressions have
-        # no DataFrame.limit equivalent and fence by name rather than
-        # silently dropping the bound
+        # frontend writes them) rebuild exactly; dynamic expressions fence
+        # by name rather than silently dropping the bound
         if "offsetExpr" in body:
             offset = _int_literal(
                 body["offsetExpr"],
@@ -409,27 +505,28 @@ class _Consumer:
                 "FetchRel.count_expr (dynamic counts not consumable)")
             if count < 0:
                 # review catch r12: -1 would alias the deprecated field's
-                # NO_LIMIT sentinel (silently unlimited rows); other
-                # negatives would surface as a raw Spark limit() error
+                # NO_LIMIT sentinel (silently unlimited rows)
                 raise SubstraitError(
                     f"FetchRel.count_expr is negative ({count}); the "
                     "expression form has no sentinel values (omit "
                     "count_expr for no limit)")
-        if offset > 0:
-            df = df.offset(offset)
+        tail = ""
         if count != proto.NO_LIMIT:
-            df = df.limit(count)
-        return df
+            tail += f" LIMIT {count}"
+        if offset > 0:
+            tail += f" OFFSET {offset}"
+        return _Rel(_select(_fnames(inp.width), _over(inp.sql), tail),
+                    inp.width)
 
-    _SORT_METHODS = {
-        proto.SORT_ASC_NULLS_FIRST: "asc_nulls_first",
-        proto.SORT_ASC_NULLS_LAST: "asc_nulls_last",
-        proto.SORT_DESC_NULLS_FIRST: "desc_nulls_first",
-        proto.SORT_DESC_NULLS_LAST: "desc_nulls_last",
+    _SORT_ORDERS = {
+        proto.SORT_ASC_NULLS_FIRST: "ASC NULLS FIRST",
+        proto.SORT_ASC_NULLS_LAST: "ASC NULLS LAST",
+        proto.SORT_DESC_NULLS_FIRST: "DESC NULLS FIRST",
+        proto.SORT_DESC_NULLS_LAST: "DESC NULLS LAST",
     }
 
-    def _sort_keys(self, df: DataFrame, sorts: list[dict]) -> list[Column]:
-        """SortField list → direction-applied Columns (shared by global
+    def _sort_keys(self, width: int, sorts: list[dict]) -> list[str]:
+        """SortField list → direction-applied sort keys (shared by global
         sort, LocalSortRel, and window order specs). Clustered /
         comparison-function sorts rejected, like consumer.rs:187-203."""
         keys = []
@@ -440,95 +537,98 @@ class _Consumer:
                 raise SubstraitError(
                     "SortField with a comparison function is not "
                     "consumable (≡ consumer.rs:187-203 clustered sorts)")
-            method = self._SORT_METHODS.get(sf.get("direction"))
-            if method is None:
+            order = self._SORT_ORDERS.get(sf.get("direction"))
+            if order is None:
                 raise SubstraitError(f"unsupported sort kind {sf}")
-            col = self.rex(sf["expr"], self._fcol)
-            keys.append(getattr(col, method)())
+            keys.append(f"{self.rex(sf['expr'], self._fields(width))} {order}")
         return keys
 
-    def _rel_sort(self, body: dict) -> DataFrame:
-        df = self.rel(body["input"])
-        return df.orderBy(*self._sort_keys(df, body.get("sorts", [])))
+    def _rel_sort(self, body: dict) -> _Rel:
+        inp = self.rel(body["input"])
+        keys = self._sort_keys(inp.width, body.get("sorts", []))
+        if not keys:
+            raise SubstraitError("SortRel requires at least one sort field")
+        return _Rel(_select(_fnames(inp.width), _over(inp.sql),
+                            f" ORDER BY {', '.join(keys)}"), inp.width)
 
-    def _rel_aggregate(self, body: dict) -> DataFrame:
-        df = self.rel(body["input"])
+    def _rel_aggregate(self, body: dict) -> _Rel:
+        inp = self.rel(body["input"])
         groupings = body.get("groupings", [])
         if body.get("groupingExpressions") or len(groupings) > 1:
-            return self._rel_aggregate_grouping_sets(df, body)
+            return self._aggregate_grouping_sets(inp, body)
         if len(groupings) != 1:
             raise SubstraitError("exactly one grouping set (consumer.rs:230-235)")
-        resolver = self._fcol
-        g_exprs = groupings[0].get("groupingExpressions", [])
-        # aliased straight to the output ordinal names — no trailing toDF
-        # rename (each classic Dataset op analyzes eagerly; see _rel_read)
-        g_cols = [self.rex(g, resolver).alias(f"f{j}")
-                  for j, g in enumerate(g_exprs)]
-
+        resolver = self._fields(inp.width)
+        g = [self.rex(e, resolver)
+             for e in groupings[0].get("groupingExpressions", [])]
+        items = [f"{c} AS f{j}" for j, c in enumerate(g)]
         measures = body.get("measures", [])
         if not measures:
             # distinct-as-aggregate (producer.rs:203-222; pinned equivalence
             # tests/roundtrip.rs:88-103)
-            return df.select(*g_cols).distinct()
+            return _Rel(_select(items, _over(inp.sql), distinct=True), len(g))
+        items += [f"{self._measure(m, resolver)} AS f{len(g) + k}"
+                  for k, m in enumerate(measures)]
+        # literals render as casts, never as bare integers, so a GROUP BY
+        # key is never read as a select-list ordinal
+        tail = f" GROUP BY {', '.join(g)}" if g else ""
+        return _Rel(_select(items, _over(inp.sql), tail),
+                    len(g) + len(measures))
 
-        extra: list[Column] = []  # precomputed args for the F.expr fallback
-        m_cols: list[Column] = []
-        for k, m in enumerate(measures):
-            m_cols.append(self._measure(m, k, resolver, extra))
-        if extra:
-            df = df.select("*", *extra)
-        n_g = len(g_cols)
-        return df.groupBy(*g_cols).agg(
-            *[c.alias(f"f{n_g + k}") for k, c in enumerate(m_cols)])
-
-    def _rel_aggregate_grouping_sets(self, df: DataFrame, body: dict) -> DataFrame:
-        """Multi-grouping AggregateRel (GROUPING SETS / ROLLUP / CUBE) via
-        ``DataFrame.groupingSets``. Output follows the producer's documented
-        convention: grouping expressions (declaration order, null when
-        absent from a row's set) ++ measures ++ i32 grouping-set index —
-        reconstructed from Spark's ``grouping_id()`` bitmask (bit j,
-        MSB-first, set ⇔ grouping column j absent)."""
-        resolver = self._fcol
+    def _aggregate_grouping_sets(self, inp: _Rel, body: dict) -> _Rel:
+        """Multi-grouping AggregateRel (GROUPING SETS / ROLLUP / CUBE).
+        Output follows the producer's documented convention: grouping
+        expressions (declaration order, null when absent from a row's set)
+        ++ measures ++ i32 grouping-set index — reconstructed from Spark's
+        ``grouping_id()`` bitmask (bit j, MSB-first, set ⇔ grouping column
+        j absent). The grouping columns are listed in GROUP BY explicitly,
+        so the bit order is the declaration order even for a column no set
+        uses."""
+        resolver = self._fields(inp.width)
         flat = body.get("groupingExpressions", [])
         if not flat:
             raise SubstraitError(
                 "multiple grouping sets require rel-level groupingExpressions"
             )
         n_g = len(flat)
-        g_cols = [self.rex(g, resolver).alias(f"__g{j}")
-                  for j, g in enumerate(flat)]
-        sets = [[int(i) for i in g.get("expressionReferences", [])]
-                for g in body.get("groupings", [])]
-        measures = body.get("measures", [])
-        extra: list[Column] = []
-        m_cols = [self._measure(m, k, resolver, extra)
-                  for k, m in enumerate(measures)]
-        base = df.select("*", *g_cols, *extra)
-        gcols = [F.col(f"__g{j}") for j in range(n_g)]
-        gd = base.groupingSets(
-            [[F.col(f"__g{j}") for j in s] for s in sets], *gcols
-        )
-        agged = gd.agg(
-            *[c.alias(f"m{k}") for k, c in enumerate(m_cols)],
-            F.grouping_id().alias("__gid"),
-        )
-        set_idx = None
-        for r, s in enumerate(sets):
-            mask = sum(1 << (n_g - 1 - j) for j in range(n_g) if j not in s)
-            cond = F.col("__gid") == mask
-            set_idx = F.when(cond, F.lit(r)) if set_idx is None \
-                else set_idx.when(cond, F.lit(r))
-        return agged.select(
-            *[c.alias(f"f{j}") for j, c in enumerate(gcols)],
-            *[F.col(f"m{k}").alias(f"f{n_g + k}")
-              for k in range(len(m_cols))],
-            set_idx.cast("int").alias(f"f{n_g + len(m_cols)}"),
-        )
+        g = [self.rex(e, resolver) for e in flat]
+        sets = [[int(i) for i in s.get("expressionReferences", [])]
+                for s in body.get("groupings", [])]
+        measures = [self._measure(m, resolver)
+                    for m in body.get("measures", [])]
+        gcols = [f"__g{j}" for j in range(n_g)]
+        keyed = _select(_fnames(inp.width) + [f"{c} AS __g{j}"
+                                              for j, c in enumerate(g)],
+                        _over(inp.sql))
+        spelled = ", ".join("(" + ", ".join(gcols[j] for j in s) + ")"
+                            for s in sets)
+        agged = _select(gcols + [f"{c} AS m{k}" for k, c in enumerate(measures)]
+                        + ["grouping_id() AS __gid"], _over(keyed),
+                        f" GROUP BY {', '.join(gcols)} GROUPING SETS ({spelled})")
+        whens = " ".join(
+            f"WHEN __gid = {sum(1 << (n_g - 1 - j) for j in range(n_g) if j not in s)}"
+            f" THEN {r}" for r, s in enumerate(sets))
+        items = ([f"__g{j} AS f{j}" for j in range(n_g)]
+                 + [f"m{k} AS f{n_g + k}" for k in range(len(measures))]
+                 + [f"CAST(CASE {whens} END AS INT) AS f{n_g + len(measures)}"])
+        return _Rel(_select(items, _over(agged)), len(items))
 
     _CONSUMABLE_PHASES = (None, "AGGREGATION_PHASE_UNSPECIFIED",
                           "AGGREGATION_PHASE_INITIAL_TO_RESULT")
 
-    def _measure(self, m: dict, k: int, resolver, extra: list[Column]) -> Column:
+    @staticmethod
+    def _agg_call(table: dict, name: str, args: list[str], unknown: str) -> str:
+        template = table.get(name)
+        if template is None:
+            raise SubstraitError(unknown)
+        expected = ops.arity(template)
+        if expected is not None and len(args) != expected:
+            raise SubstraitError(
+                f"aggregate function {name!r} expects {expected} args, got "
+                f"{len(args)}")
+        return ops.fill(template, args)
+
+    def _measure(self, m: dict, resolver) -> str:
         body = m["measure"]
         name = self._fn_name(body["functionReference"])
         # r11 foreign-field fences (same silent-wrong-value class as emit):
@@ -544,7 +644,6 @@ class _Consumer:
         if body.get("sorts"):
             return self._ordered_measure(name, body, m, resolver)
         args = [self.rex(a["value"], resolver) for a in body.get("arguments", [])]
-        distinct = body.get("invocation") == proto.AGG_DISTINCT
         filt = m.get("filter")
         if filt is not None:
             # per-measure FILTER (consumer.rs:242-251): fn(x) FILTER (WHERE p)
@@ -558,43 +657,42 @@ class _Consumer:
                     "rewrite is unsound for null-keeping aggregates"
                 )
             p = self.rex(filt, resolver)
-            args = [F.when(p, a) for a in args] if args else [F.when(p, F.lit(1))]
-        if distinct:
-            builder = ops.AGG_CONSUME_DISTINCT.get(name)
-            if builder is not None:
-                return builder(*args)
-            sql_name = _AGG_SQL_NAME.get(name)
-            if sql_name is None or len(args) != 1:
+            args = [f"CASE WHEN {p} THEN {a} END" for a in args or ["1"]]
+        if body.get("invocation") == proto.AGG_DISTINCT:
+            template = ops.AGG_DISTINCT_SQL.get(name)
+            expected = ops.arity(template) if template else None
+            if template is None or (expected is not None
+                                    and len(args) != expected):
                 raise SubstraitError(f"DISTINCT not supported for {name!r}")
-            tmp = f"__m{k}_distinct_arg"
-            extra.append(args[0].alias(tmp))
-            return F.expr(f"{sql_name}(DISTINCT {tmp})")
-        builder = ops.AGG_CONSUME.get(name)
-        if builder is None:
-            raise SubstraitError(
-                f"unknown aggregate function {name!r} (≡ consumer.rs:401-407)"
-            )
-        return builder(*args)
+            return ops.fill(template, args)
+        return self._agg_call(
+            ops.AGG_SQL, name, args,
+            f"unknown aggregate function {name!r} (≡ consumer.rs:401-407)")
 
     _ORDERED_REBUILDS = frozenset(("array_agg", "first_value", "last_value"))
 
+    def _lambda_names(self, n: int) -> list[str]:
+        names = [f"__x{self._n_lambda_vars + k}" for k in range(n)]
+        self._n_lambda_vars += n
+        return names
+
     def _ordered_measure(self, name: str, body: dict, m: dict,
-                         resolver) -> Column:
+                         resolver) -> str:
         """``AggregateFunction.sorts`` rebuild (r12; was a fence): the
         ordered aggregates Spark can express EXACTLY, all JVM codegen —
 
             array_agg(x ORDER BY k…)  ≡ transform(array_sort(
-                collect_list(struct(k…, x)), cmp), s -> s.v)
+                collect_list(named_struct(k…, x)), cmp), s -> s.v)
             first_value / last_value  ≡ get(sorted, 0 | size-1).v
 
-        The struct wrapper keeps rows whose value is null (``struct`` is
+        The struct wrapper keeps rows whose value is null (a struct is
         never null even when its fields are), matching DataFusion /
         DuckDB null-keeping for ordered array_agg; ``cmp`` is a nested
         CASE honoring each SortField's direction and null placement, so
         all four direction enums and multi-key sorts rebuild exactly.
         A per-measure FILTER composes soundly here — unlike the
-        unordered first/last fence — because ``F.when(p, struct)`` nulls
-        the whole struct and ``collect_list`` then drops exactly the
+        unordered first/last fence — because ``CASE WHEN p THEN struct``
+        nulls the whole struct and ``collect_list`` then drops exactly the
         non-matching ROWS (row exclusion, not argument-nulling), while
         the explicit sort defines which surviving row is "first". Groups
         whose rows are all filtered out yield NULL (SQL
@@ -614,11 +712,9 @@ class _Consumer:
         matching SQL's FILTER-then-DISTINCT order). Any OTHER
         sort-key/argument combination keeps the named fence —
         deduplication keeps an unspecified row's key there, so no
-        rebuild is exact. Remaining fences: other aggregate names
-        (their results are order-insensitive only if the producer
-        thought otherwise — translate-or-error) and comparator sorts
-        (same as _sort_keys). The reference never writes this field
-        (producer.rs emits plain AggregateFunction); this is
+        rebuild is exact. Remaining fences: other aggregate names and
+        comparator sorts (same as _sort_keys). The reference never writes
+        this field (producer.rs emits plain AggregateFunction); this is
         foreign-producer surface, consume-only.
         """
         if name not in self._ORDERED_REBUILDS:
@@ -645,7 +741,7 @@ class _Consumer:
                 f"ordered aggregate {name!r} expects 1 argument, "
                 f"got {len(args)}")
         dirs: list[tuple[bool, bool]] = []  # (ascending, nulls_first)
-        keys: list[Column] = []
+        keys: list[str] = []
         for sf in body["sorts"]:
             if "comparisonFunctionReference" in sf:
                 raise SubstraitError(
@@ -659,64 +755,65 @@ class _Consumer:
                 d in (proto.SORT_ASC_NULLS_FIRST, proto.SORT_DESC_NULLS_FIRST),
             ))
             keys.append(self.rex(sf["expr"], resolver))
-        st = F.struct(*[k.alias(f"k{i}") for i, k in enumerate(keys)],
-                      args[0].alias("v"))
+        st = "named_struct(" + ", ".join(
+            [f"'k{i}', {k}" for i, k in enumerate(keys)]
+            + [f"'v', {args[0]}"]) + ")"
         filt = m.get("filter")
         if filt is not None:
-            st = F.when(self.rex(filt, resolver), st)
-        collected = F.collect_list(st)
+            st = f"CASE WHEN {self.rex(filt, resolver)} THEN {st} END"
+        collected = f"collect_list({st})"
         if distinct:
             # key ≡ value (guarded above): dedup the null-keeping struct
             # array before the sort — FILTER already excluded its rows
             # via the null-struct drop, so the order is
             # filter → DISTINCT → ORDER BY, as in SQL
-            collected = F.array_distinct(collected)
-
-        def cmp(a: Column, b: Column) -> Column:
-            res: Column = F.lit(0)
-            for i in reversed(range(len(dirs))):
-                asc, nulls_first = dirs[i]
-                ka, kb = a[f"k{i}"], b[f"k{i}"]
-                lt, nf = (-1 if asc else 1), (-1 if nulls_first else 1)
-                res = (F.when(ka.isNull() & kb.isNull(), res)
-                       .when(ka.isNull(), F.lit(nf))
-                       .when(kb.isNull(), F.lit(-nf))
-                       .when(ka < kb, F.lit(lt))
-                       .when(ka > kb, F.lit(-lt))
-                       .otherwise(res))
-            return res
-
-        srt = F.array_sort(collected, cmp)
+            collected = f"array_distinct({collected})"
+        a, b = self._lambda_names(2)
+        cmp = "0"
+        for i in reversed(range(len(dirs))):
+            asc, nulls_first = dirs[i]
+            ka, kb = f"{a}.k{i}", f"{b}.k{i}"
+            lt, nf = (-1 if asc else 1), (-1 if nulls_first else 1)
+            cmp = (f"CASE WHEN ({ka} IS NULL AND {kb} IS NULL) THEN {cmp} "
+                   f"WHEN {ka} IS NULL THEN {nf} WHEN {kb} IS NULL THEN {-nf} "
+                   f"WHEN {ka} < {kb} THEN {lt} WHEN {ka} > {kb} THEN {-lt} "
+                   f"ELSE {cmp} END")
+        srt = f"array_sort({collected}, ({a}, {b}) -> {cmp})"
         if name == "array_agg":
-            return F.when(F.size(collected) == 0, F.lit(None)) \
-                .otherwise(F.transform(srt, lambda s: s["v"]))
-        idx = F.lit(0) if name == "first_value" else F.size(collected) - 1
-        return F.get(srt, idx)["v"]
+            (s,) = self._lambda_names(1)
+            return (f"CASE WHEN size({collected}) = 0 THEN NULL "
+                    f"ELSE transform({srt}, {s} -> {s}.v) END")
+        idx = "0" if name == "first_value" else f"(size({collected}) - 1)"
+        return f"get({srt}, {idx}).v"
 
-    _JOIN_HOW = {
-        proto.JOIN_TYPE_INNER: "inner",
-        proto.JOIN_TYPE_LEFT: "left",
-        proto.JOIN_TYPE_RIGHT: "right",
-        proto.JOIN_TYPE_OUTER: "full",
-        proto.JOIN_TYPE_SEMI: "left_semi",
-        proto.JOIN_TYPE_ANTI: "left_anti",
+    _JOIN_KEYWORDS = {
+        proto.JOIN_TYPE_INNER: "JOIN",
+        proto.JOIN_TYPE_LEFT: "LEFT OUTER JOIN",
+        proto.JOIN_TYPE_RIGHT: "RIGHT OUTER JOIN",
+        proto.JOIN_TYPE_OUTER: "FULL OUTER JOIN",
+        proto.JOIN_TYPE_SEMI: "LEFT SEMI JOIN",
+        proto.JOIN_TYPE_ANTI: "LEFT ANTI JOIN",
+        # LEFT SINGLE join (r12; DuckDB's substrait producer emits it for
+        # scalar subqueries): exactly like LEFT, except >1 match for a left
+        # ROW is a runtime error — see _single_join_guard
+        proto.JOIN_TYPE_SINGLE: "LEFT OUTER JOIN",
     }
 
     _JOIN_HINT_NAMES = frozenset(
         ("broadcast", "merge", "shuffle_hash", "shuffle_replicate_nl"))
 
-    def _rel_join(self, body: dict) -> DataFrame:
+    def _rel_join(self, body: dict) -> _Rel:
         left = self.rel(body["left"])
         right = self.rel(body["right"])
         # r10: re-apply per-side strategy hints (Any-wrapped JoinHintInfo
-        # in the spec advanced_extension slot) BEFORE aliasing, so the
-        # rebuilt plan keeps the user's join-strategy decision
-        # the enhancement fence runs generically in rel() (r12); only the
-        # optimization hints are join-specific
+        # in the spec advanced_extension slot), so the rebuilt plan keeps
+        # the user's join-strategy decision; the enhancement fence runs
+        # generically in rel() (r12)
+        hints = []
         for opt in body.get("advancedExtension", {}).get("optimization", []):
             if opt.get("@type", "").endswith("JoinHintInfo"):
-                for key, side in (("leftStrategy", "left"),
-                                  ("rightStrategy", "right")):
+                for key, side in (("leftStrategy", "__sl"),
+                                  ("rightStrategy", "__sr")):
                     name = opt.get(key)
                     if name is None:
                         continue
@@ -732,73 +829,73 @@ class _Consumer:
                             f"(supported: {sorted(self._JOIN_HINT_NAMES)})",
                             stacklevel=2)
                         continue
-                    if side == "left":
-                        left = left.hint(name)
-                    else:
-                        right = right.hint(name)
-        n_left = len(left.columns)
-        single = body.get("type") == proto.JOIN_TYPE_SINGLE
-        if single:
-            # LEFT SINGLE join (r12; DuckDB's substrait producer emits it
-            # for scalar subqueries): exactly like LEFT, except >1 match
-            # for a left ROW is a runtime error. Tag each physical left
-            # row (monotonically_increasing_id — unique per row, stable
-            # given the upstream partitioning) so the guard below can
-            # count matches per row.
-            left = left.withColumn("__srow", F.monotonically_increasing_id())
-        left = left.alias("__sl")
-        right = right.alias("__sr")
-        how = "left" if single else self._JOIN_HOW.get(body.get("type"))
-        if how is None:
+                    hints.append(f"{name.upper()}({side})")
+        keyword = self._JOIN_KEYWORDS.get(body.get("type"))
+        if keyword is None:
             raise SubstraitError(f"unsupported join type {body.get('type')} "
                                  "(consumer.rs:417-439)")
+        n_left, n_right = left.width, right.width
+        semi = body.get("type") in (proto.JOIN_TYPE_SEMI, proto.JOIN_TYPE_ANTI)
+        single = body.get("type") == proto.JOIN_TYPE_SINGLE
+        post = body.get("postJoinFilter")
+        if post is not None and semi:
+            # JoinRel.post_join_filter (r11): semi/anti outputs carry only
+            # the left side, so a post filter over the combined space
+            # cannot be applied post-hoc — fence, don't guess
+            raise SubstraitError(
+                f"postJoinFilter on a {keyword.lower()} is not consumable: "
+                "the output no longer carries the right side the filter "
+                "may reference")
 
-        def resolver(i: int) -> Column:
+        def resolver(i: int) -> str:
             # combined left++right ordinal space (consumer.rs:288-290)
-            if i < n_left:
-                return F.col(f"__sl.f{i}")
-            return F.col(f"__sr.f{i - n_left}")
+            if not 0 <= i < n_left + n_right:
+                raise SubstraitError(
+                    f"field reference ordinal {i} outside the join's "
+                    f"{n_left}+{n_right}-column input space")
+            return f"__sl.f{i}" if i < n_left else f"__sr.f{i - n_left}"
 
         cond = self.rex(body["expression"], resolver)
-        joined = left.join(right, on=cond, how=how)
+        lsrc = f"({left.sql}) AS __sl"
         if single:
-            joined = self._single_join_guard(joined, n_left,
-                                             len(right.columns))
-
-            resolver = self._fcol  # noqa: F811  guard select flattened the space
-        post = body.get("postJoinFilter")
-        if post is not None:
-            # JoinRel.post_join_filter (r11, same silent-drop class as the
-            # emit/ReadRel.filter gaps): applied AFTER the join over the
-            # combined left++right space — for outer joins this is NOT
-            # foldable into the join condition (it must also see the
-            # null-extended rows). Semi/anti outputs carry only the left
-            # side, so a post filter over the combined space cannot be
-            # applied post-hoc — fence, don't guess.
-            if how in ("left_semi", "left_anti"):
-                raise SubstraitError(
-                    f"postJoinFilter on a {how} join is not consumable: "
-                    "the output no longer carries the right side the "
-                    "filter may reference")
-            joined = joined.filter(self.rex(post, resolver))
-        return joined.toDF(*_fnames(len(joined.columns)))
+            # tag each physical left row (monotonically_increasing_id —
+            # unique per row, stable given the upstream partitioning) so
+            # the guard can count matches per row
+            lsrc = ("(" + _select(_fnames(n_left) + [
+                "monotonically_increasing_id() AS __srow"],
+                _over(left.sql)) + ") AS __sl")
+        src = f"{lsrc} {keyword} ({right.sql}) AS __sr ON {cond}"
+        hint = f"/*+ {', '.join(hints)} */ " if hints else ""
+        width = n_left if semi else n_left + n_right
+        if single:
+            sql = self._single_join_guard(src, hint, n_left, n_right)
+            if post is not None:
+                sql = _select(_fnames(width), _over(sql),
+                              f" WHERE {self.rex(post, self._fields(width))}")
+            return _Rel(sql, width)
+        items = [f"__sl.f{i} AS f{i}" for i in range(n_left)]
+        if not semi:
+            items += [f"__sr.f{j} AS f{n_left + j}" for j in range(n_right)]
+        # JoinRel.post_join_filter (r11): applied AFTER the join over the
+        # combined left++right space — for outer joins this is NOT foldable
+        # into the join condition (it must also see the null-extended rows)
+        where = f" WHERE {self.rex(post, resolver)}" if post is not None else ""
+        return _Rel(_select(items, src, where, hint), width)
 
     @staticmethod
-    def _single_join_guard(joined: DataFrame, n_left: int,
-                           n_right: int) -> DataFrame:
+    def _single_join_guard(src: str, hint: str, n_left: int,
+                           n_right: int) -> str:
         """SINGLE-join multi-match guard over one window shuffle on the
         unique ``__srow`` tag (the verification cost DuckDB pays inside
         its hash join): the multi-match ``assert_true`` rides INSIDE the
-        ``row_number() == 1`` filter predicate, so both the cardinality
+        ``row_number() = 1`` filter predicate, so both the cardinality
         (a filter defines the row set — no projection can optimize it
         away) and the error (the predicate must evaluate to decide each
         row) survive ANY downstream pruning, including an emit that
-        keeps only left ordinals (review catch r12 + ADVICE r12: the
-        assert previously lived only in the right-column expressions,
-        where an all-right-column prune silently degraded the DuckDB-
-        style cardinality error to a dedup). The right columns keep the
-        scalar-subquery ``when(guard.isNull(), col)`` wrap so their
-        evaluation order can never observe an unguarded duplicate.
+        keeps only left ordinals (review catch r12 + ADVICE r12). The
+        right columns keep the scalar-subquery ``CASE WHEN guard IS NULL``
+        wrap so their evaluation order can never observe an unguarded
+        duplicate.
 
         A left row with no match counts 1 (its null-extended row) and
         passes — SINGLE null-extends like LEFT. Output is the flat
@@ -813,121 +910,109 @@ class _Consumer:
         subquery produce path accepts the same), and the failure mode is
         a spurious multi-match ERROR or dedup — never a silently wrong
         value for a plan that was valid."""
-        from pyspark.sql.window import Window as W
-
         # one spec for both functions (same partition AND order) so they
         # plan into a SINGLE Window stage over one shuffle; the count
         # takes an explicit full-partition frame (an ordered count would
         # otherwise default to a running RANGE frame)
-        spec = W.partitionBy(F.col("__sl.__srow")) \
-            .orderBy(F.col("__sl.__srow"))
-        guard = F.assert_true(
-            F.count(F.lit(1)).over(
-                spec.rowsBetween(W.unboundedPreceding,
-                                 W.unboundedFollowing)) <= 1,
-            F.lit("single join matched more than one right row for a "
-                  "left row"))
-        rn = F.row_number().over(spec)
-        return joined.select(
-            *[F.col(f"__sl.f{i}").alias(f"f{i}") for i in range(n_left)],
-            *[F.when(guard.isNull(), F.col(f"__sr.f{j}"))
-              .alias(f"f{n_left + j}") for j in range(n_right)],
-            rn.alias("__srn"), guard.alias("__sguard"),
-        ).filter(F.col("__sguard").isNull() & (F.col("__srn") == 1)) \
-            .drop("__srn", "__sguard")
+        spec = "PARTITION BY __sl.__srow ORDER BY __sl.__srow"
+        guard = (f"assert_true(count(1) OVER ({spec} ROWS BETWEEN UNBOUNDED "
+                 "PRECEDING AND UNBOUNDED FOLLOWING) <= 1, 'single join "
+                 "matched more than one right row for a left row')")
+        items = ([f"__sl.f{i} AS f{i}" for i in range(n_left)]
+                 + [f"CASE WHEN {guard} IS NULL THEN __sr.f{j} END "
+                    f"AS f{n_left + j}" for j in range(n_right)]
+                 + [f"row_number() OVER ({spec}) AS __srn",
+                    f"{guard} AS __sguard"])
+        return _select(_fnames(n_left + n_right),
+                       _over(_select(items, src, hint=hint)),
+                       " WHERE (__sguard IS NULL AND __srn = 1)")
 
-    def _rel_cross(self, body: dict) -> DataFrame:
-        """CrossRel → ``DataFrame.crossJoin`` (r11). Foreign producers
-        (DuckDB's substrait extension) emit CrossRel directly; our own
-        producer keeps the reference's inner-on-true encoding for Catalyst
-        Join(Cross) nodes, so this path is consume-only. Output is the
-        spec's left++right ordinal space."""
-        left = self.rel(body["left"]).alias("__cl")
-        right = self.rel(body["right"]).alias("__cr")
-        n_left = len(left.columns)
-        out = left.crossJoin(right)
-        return out.select(
-            *[F.col(f"__cl.f{i}").alias(f"f{i}") for i in range(n_left)],
-            *[F.col(f"__cr.f{i}").alias(f"f{n_left + i}")
-              for i in range(len(right.columns))])
+    def _rel_cross(self, body: dict) -> _Rel:
+        """CrossRel → ``CROSS JOIN`` (r11). Foreign producers (DuckDB's
+        substrait extension) emit CrossRel directly; our own producer keeps
+        the reference's inner-on-true encoding for Catalyst Join(Cross)
+        nodes, so this path is consume-only. Output is the spec's
+        left++right ordinal space."""
+        left = self.rel(body["left"])
+        right = self.rel(body["right"])
+        n = left.width
+        items = ([f"__cl.f{i} AS f{i}" for i in range(n)]
+                 + [f"__cr.f{i} AS f{n + i}" for i in range(right.width)])
+        return _Rel(_select(items, f"({left.sql}) AS __cl CROSS JOIN "
+                                   f"({right.sql}) AS __cr"),
+                    n + right.width)
 
-    def _rel_set(self, body: dict) -> DataFrame:
-        op = body.get("op")
-        dfs = [self.rel(r) for r in body["inputs"]]
-        if op == "SET_OP_UNION_ALL":
-            out = reduce(DataFrame.unionAll, dfs)
-        elif op == "SET_OP_UNION_DISTINCT":
-            out = reduce(DataFrame.unionAll, dfs).distinct()
-        elif op == "SET_OP_INTERSECTION_PRIMARY":
-            out = reduce(DataFrame.intersect, dfs)
-        elif op == "SET_OP_MINUS_PRIMARY":
-            # PRIMARY = distinct semantics (SQL EXCEPT), like the
-            # INTERSECTION_PRIMARY branch above — subtract(), not exceptAll()
-            out = reduce(DataFrame.subtract, dfs)
-        else:
-            raise SubstraitError(f"unsupported set op {op}")
-        # children are f-named by the consumer invariant and set ops keep
-        # the left input's names — no rename (= no extra analysis pass)
-        return out
-
-    _RANKING_FNS = {
-        "row_number": F.row_number,
-        "rank": F.rank,
-        "dense_rank": F.dense_rank,
-        "percent_rank": F.percent_rank,
-        "cume_dist": F.cume_dist,
+    _SET_OPS = {
+        "SET_OP_UNION_ALL": "UNION ALL",
+        "SET_OP_UNION_DISTINCT": "UNION ALL",  # + DISTINCT over the union
+        "SET_OP_INTERSECTION_PRIMARY": "INTERSECT",
+        # PRIMARY = distinct semantics (SQL EXCEPT), like INTERSECT above
+        "SET_OP_MINUS_PRIMARY": "EXCEPT",
     }
 
-    def _rel_window(self, body: dict) -> DataFrame:
-        """ConsistentPartitionWindowRel → ``col.over(Window...)`` columns
+    def _rel_set(self, body: dict) -> _Rel:
+        op = body.get("op")
+        keyword = self._SET_OPS.get(op)
+        if keyword is None:
+            raise SubstraitError(f"unsupported set op {op}")
+        inputs = [self.rel(r) for r in body["inputs"]]
+        if not inputs:
+            raise SubstraitError("SetRel requires at least one input")
+        sql = f" {keyword} ".join(f"({r.sql})" for r in inputs)
+        width = inputs[0].width
+        if op == "SET_OP_UNION_DISTINCT":
+            sql = _select(_fnames(width), _over(sql), distinct=True)
+        return _Rel(sql, width)
+
+    _RANKING_FNS = frozenset(
+        ("row_number", "rank", "dense_rank", "percent_rank", "cume_dist"))
+
+    def _rel_window(self, body: dict) -> _Rel:
+        """ConsistentPartitionWindowRel → ``fn(...) OVER (...)`` columns
         appended to the input (extension beyond the reference)."""
-        from pyspark.sql.window import Window as W
+        inp = self.rel(body["input"])
+        n = inp.width
+        resolver = self._fields(n)
+        spec = []
+        part = [self.rex(p, resolver)
+                for p in body.get("partitionExpressions", [])]
+        if part:
+            spec.append("PARTITION BY " + ", ".join(part))
+        order = self._sort_keys(n, body.get("sorts", []))
+        if order:
+            spec.append("ORDER BY " + ", ".join(order))
+        fns = body.get("windowFunctions", [])
 
-        df = self.rel(body["input"])
-        resolver = self._fcol
-        part = [self.rex(p, resolver) for p in body.get("partitionExpressions", [])]
-        order = self._sort_keys(df, body.get("sorts", []))
-
-        # r17 opt: ONE schema probe for every sum/avg DISTINCT rebuild in
-        # this rel instead of one per measure — _distinct_fold_post needs
-        # the argument's Spark type, and each ``df.select(arg).schema``
-        # re-runs the analyzer over the whole input tree (~30 ms per
-        # probe at the q24 foreign leg's depth; grows with plan size).
-        # Args are rex'd once here and REUSED by the main loop, so the
-        # built expression tree is unchanged; phase-invalid or unknown-
-        # name entries are skipped so the main loop's named errors fire
-        # exactly as before.
-        fold_args: dict[int, Column] = {}
-        for j, wf in enumerate(body.get("windowFunctions", [])):
-            if wf.get("invocation") != proto.AGG_DISTINCT:
-                continue
-            if wf.get("phase") not in self._CONSUMABLE_PHASES:
-                continue
+        # ONE schema probe for every sum/avg DISTINCT rebuild in this rel:
+        # _distinct_fold_post needs the argument's Spark type. Phase-invalid
+        # or unknown-name entries are skipped so the main loop's named
+        # errors fire first.
+        fold_args: dict[int, str] = {}
+        for j, wf in enumerate(fns):
             raw = [a["value"] for a in wf.get("arguments", [])]
-            if len(raw) == 1 and \
-                    self._fn_name(wf["functionReference"]) in ("sum", "avg"):
+            if wf.get("invocation") == proto.AGG_DISTINCT \
+                    and wf.get("phase") in self._CONSUMABLE_PHASES \
+                    and len(raw) == 1 \
+                    and self._fn_name(wf["functionReference"]) in ("sum", "avg"):
                 fold_args[j] = self.rex(raw[0], resolver)
-        fold_types: dict[int, object] = {}
+        fold_types = {}
         if fold_args:
-            probed = df.select(*[c.alias(f"_t{j}")
-                                 for j, c in fold_args.items()]).schema
+            probed = self._probe(_select(
+                [f"{c} AS _t{j}" for j, c in fold_args.items()],
+                _over(inp.sql))).schema
             fold_types = {j: f.dataType
                           for j, f in zip(fold_args, probed.fields)}
 
-        n = len(df.columns)
         outs = []
-        for j, wf in enumerate(body.get("windowFunctions", [])):
+        for j, wf in enumerate(fns):
             name = self._fn_name(wf["functionReference"])
             if wf.get("phase") not in self._CONSUMABLE_PHASES:
                 raise SubstraitError(
                     f"window function phase {wf['phase']!r} is not "
                     "consumable (full computation only)")
             raw = [a["value"] for a in wf.get("arguments", [])]
-            spec = W.partitionBy(*part)
-            if order:
-                spec = spec.orderBy(*order)
             framed = True  # ranking/offset functions forbid explicit frames
-            post = None    # wraps the windowed value AFTER .over()
+            post = None    # wraps the windowed value AFTER OVER
             if wf.get("invocation") == proto.AGG_DISTINCT:
                 # Spark has no native DISTINCT window aggregates, but the
                 # value-set forms rebuild exactly (r12): count(DISTINCT x)
@@ -935,20 +1020,16 @@ class _Consumer:
                 # drops nulls like count DISTINCT and respects the frame;
                 # DISTINCT is a no-op for min/max. sum/avg fold the value
                 # set with an explicit accumulator cast to Spark's native
-                # sum result type (r13; was a fence — the cast closes the
-                # silent result-type drift the fence named).
+                # sum result type (r13).
                 if name == "count" and len(raw) == 1:
-                    col = F.collect_set(self.rex(raw[0], resolver))
+                    col = f"collect_set({self.rex(raw[0], resolver)})"
                     # cast to count's native LongType (review catch r13:
-                    # F.size returns int32 — the same result-type drift
-                    # the sum/avg fold closes with its accumulator cast)
-                    post = lambda c: F.size(c).cast("long")  # noqa: E731
+                    # size returns int32)
+                    post = lambda c: f"CAST(size({c}) AS BIGINT)"  # noqa: E731
                 elif name in ("min", "max") and len(raw) == 1:
-                    col = (F.min if name == "min" else F.max)(
-                        self.rex(raw[0], resolver))
+                    col = f"{name}({self.rex(raw[0], resolver)})"
                 elif name in ("sum", "avg") and len(raw) == 1:
-                    arg = fold_args[j]
-                    col = F.collect_set(arg)
+                    col = f"collect_set({fold_args[j]})"
                     post = self._distinct_fold_post(name, fold_types[j])
                 else:
                     raise SubstraitError(
@@ -956,35 +1037,35 @@ class _Consumer:
                         "Spark rebuild (count/min/max/sum/avg rebuild via "
                         "the frame's value set)")
             elif name in self._RANKING_FNS:
-                col, framed = self._RANKING_FNS[name](), False
+                col, framed = f"{name}()", False
             elif name == "ntile":
-                col, framed = F.ntile(_int_literal(raw[0], "ntile buckets")), False
+                col = f"ntile({_int_literal(raw[0], 'ntile buckets')})"
+                framed = False
             elif name in ("lag", "lead"):
-                fn = F.lag if name == "lag" else F.lead
-                off = _int_literal(raw[1], f"{name} offset")
-                # F.lag/lead take the default as a plain value, not a Column
-                default = _scalar_literal(raw[2]) if len(raw) > 2 else None
-                col, framed = fn(self.rex(raw[0], resolver), off, default), False
+                args = [self.rex(raw[0], resolver),
+                        str(_int_literal(raw[1], f"{name} offset"))]
+                if len(raw) > 2:
+                    args.append(_py_literal(_scalar_literal(raw[2])))
+                col, framed = f"{name}({', '.join(args)})", False
             elif name == "nth_value":
-                col = F.nth_value(self.rex(raw[0], resolver),
-                                  _int_literal(raw[1], "nth_value n"))
+                col = (f"nth_value({self.rex(raw[0], resolver)}, "
+                       f"{_int_literal(raw[1], 'nth_value n')})")
             else:
-                builder = ops.AGG_CONSUME.get(name)
-                if builder is None:
-                    raise SubstraitError(f"unknown window function {name!r}")
-                col = builder(*[self.rex(a, resolver) for a in raw])
+                col = self._agg_call(
+                    ops.AGG_SQL, name, [self.rex(a, resolver) for a in raw],
+                    f"unknown window function {name!r}")
+            frame = []
             if framed:
-                lo = _frame_bound(wf.get("lowerBound"), lower=True)
-                hi = _frame_bound(wf.get("upperBound"), lower=False)
-                if wf.get("boundsType") == proto.BOUNDS_RANGE:
-                    spec = spec.rangeBetween(lo, hi)
-                else:
-                    spec = spec.rowsBetween(lo, hi)
-            over = col.over(spec)
+                kind = "RANGE" if wf.get("boundsType") == proto.BOUNDS_RANGE \
+                    else "ROWS"
+                frame = [f"{kind} BETWEEN "
+                         f"{_frame_bound(wf.get('lowerBound'), lower=True)} "
+                         f"AND {_frame_bound(wf.get('upperBound'), lower=False)}"]
+            over = f"{col} OVER ({' '.join(spec + frame)})"
             if post is not None:
                 over = post(over)
-            outs.append(over.alias(f"f{n + j}"))
-        return df.select("*", *outs)
+            outs.append(f"{over} AS f{n + j}")
+        return _Rel(_select(_fnames(n) + outs, _over(inp.sql)), n + len(fns))
 
     @staticmethod
     def _distinct_fold_post(name: str, dt):
@@ -1006,15 +1087,14 @@ class _Consumer:
         is type-identical to native Average's Divide(sum, count: long),
         then casts to the native avg result type decimal(min(38, p+4),
         min(38, s+4)). ``dt`` is the argument's Spark type — probed by
-        the caller in ONE batched ``select(...).schema`` per window rel
-        (r17 opt; was one full analysis per measure here). Integral AVG
-        folds its accumulator in DOUBLE —
-        native Average accumulates integral inputs in DoubleType, so a
-        distinct set whose sum exceeds int64 range stays a finite double
-        exactly where native avg does (r13 advisory: a long fold would
-        wrap non-ANSI / throw ANSI at that extreme); only SUM keeps the
-        long fold, matching native Sum's long accumulator wrap-for-wrap.
-        Non-numeric inputs (interval, string) keep a named fence."""
+        the caller in ONE batched schema probe per window rel. Integral
+        AVG folds its accumulator in DOUBLE — native Average accumulates
+        integral inputs in DoubleType, so a distinct set whose sum exceeds
+        int64 range stays a finite double exactly where native avg does
+        (r13 advisory: a long fold would wrap non-ANSI / throw ANSI at
+        that extreme); only SUM keeps the long fold, matching native Sum's
+        long accumulator wrap-for-wrap. Non-numeric inputs (interval,
+        string) keep a named fence. Returns ``post(over_sql) -> sql``."""
         from pyspark.sql import types as T
 
         if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType,
@@ -1031,8 +1111,12 @@ class _Consumer:
             raise SubstraitError(
                 f"DISTINCT window {name!r} over {dt.simpleString()} has "
                 "no exact Spark rebuild (numeric value-set folds only)")
+        # integral avg accumulates in double (native Average's DoubleType
+        # buffer); everything else folds in sum_t
+        acc = (avg_t if name == "avg" and isinstance(sum_t, T.LongType)
+               else sum_t).simpleString()
 
-        def post(c: Column) -> Column:
+        def post(c: str) -> str:
             # a non-null zero with a plain null-propagating add keeps a
             # decimal-overflow NULL STICKY through the rest of the fold
             # (review catch r13: folding from a NULL zero with
@@ -1040,34 +1124,27 @@ class _Consumer:
             # initial one and silently restarted the sum at 0 where
             # native sum returns NULL); the empty/all-null frame takes
             # its SQL NULL from the size guard instead
-            # integral avg accumulates in double (native Average's
-            # DoubleType buffer); everything else folds in sum_t
-            acc_t = (avg_t if name == "avg"
-                     and isinstance(sum_t, T.LongType) else sum_t)
-            folded = F.when(
-                F.size(c) > 0,
-                F.aggregate(
-                    F.array_sort(c),
-                    F.lit(0).cast(acc_t),
-                    lambda a, x: (a + x.cast(acc_t)).cast(acc_t)))
+            folded = (f"CASE WHEN size({c}) > 0 THEN aggregate("
+                      f"array_sort({c}), CAST(0 AS {acc}), (__acc, __x) -> "
+                      f"CAST((__acc + CAST(__x AS {acc})) AS {acc})) END")
             if name == "sum":
                 return folded
             if isinstance(avg_t, T.DecimalType):
                 # divide the FULL-precision sum (native divides sum by
                 # count and only then casts to the avg result type)
-                return (folded / F.size(c).cast("long")).cast(avg_t)
-            return folded.cast("double") / F.size(c)
+                return (f"CAST(({folded} / CAST(size({c}) AS BIGINT)) AS "
+                        f"{avg_t.simpleString()})")
+            return f"(CAST({folded} AS DOUBLE) / size({c}))"
 
         return post
 
-    def _rel_reference(self, body: dict) -> DataFrame:
+    def _rel_reference(self, body: dict) -> _Rel:
         """ReferenceRel (spec §ReferenceRel; r12, consume-only): points at
         ``Plan.relations[subtree_ordinal]`` so a producer can write a
         shared subtree ONCE and reference it from several places (DAG
-        reuse). Consumed with per-ordinal memoization — the shared
-        subtree becomes one DataFrame object, which Spark's planner
-        already treats as a reusable subplan (AQE's ReuseExchange/
-        ReuseSubquery dedupes the physical work). Fences: out-of-range
+        reuse). Each target compiles once, into a CTE every reference
+        reads — Catalyst inlines deterministic CTEs and AQE's
+        ReuseExchange dedupes the physical work. Fences: out-of-range
         ordinals, targeting the ROOT entry (the spec reserves references
         for plain `rel` entries; a root self-reference is circular by
         construction), and reference cycles."""
@@ -1076,8 +1153,8 @@ class _Consumer:
             raise SubstraitError(
                 f"ReferenceRel subtree_ordinal {i} out of range for "
                 f"{len(self._relations)} plan relation(s)")
-        if i in self._ref_cache:
-            return self._ref_cache[i]
+        if i in self._refs:
+            return self._refs[i]
         entry = self._relations[i]
         if "rel" not in entry:
             raise SubstraitError(
@@ -1088,13 +1165,15 @@ class _Consumer:
                 f"ReferenceRel cycle through subtree_ordinal {i}")
         self._ref_in_progress.add(i)
         try:
-            df = self.rel(entry["rel"])
+            target = self.rel(entry["rel"])
         finally:
             self._ref_in_progress.discard(i)
-        self._ref_cache[i] = df
-        return df
+        self._ctes.append(f"__r{i} AS ({target.sql})")
+        ref = self._refs[i] = _Rel(_select(_fnames(target.width), f"__r{i}"),
+                                   target.width)
+        return ref
 
-    def _rel_expand(self, body: dict) -> DataFrame:
+    def _rel_expand(self, body: dict) -> _Rel:
         """ExpandRel (spec §Expand Operation; r12, consume-only): one
         output row per duplicate index — switching fields take
         ``duplicates[d]``, consistent fields repeat their expression.
@@ -1105,8 +1184,8 @@ class _Consumer:
         (producer.py::_rel_Expand), so the consumed plan is the one
         Spark itself would build: each branch prunes/pushes down
         independently and no shuffle is introduced."""
-        df = self.rel(body["input"])
-        resolver = self._fcol
+        inp = self.rel(body["input"])
+        resolver = self._fields(inp.width)
         fields = body.get("fields", [])
         if not fields:
             raise SubstraitError("ExpandRel requires at least one field")
@@ -1141,38 +1220,18 @@ class _Consumer:
                     raise SubstraitError(
                         "ExpandField must carry switchingField or "
                         "consistentField")
-                cols.append(self.rex(e, resolver).alias(f"f{j}"))
-            branches.append(df.select(*cols))
-        from pyspark.errors import AnalysisException
+                cols.append(f"{self.rex(e, resolver)} AS f{j}")
+            branches.append(_select(cols, _over(inp.sql)))
+        self._expands.append(branches)
+        return _Rel(" UNION ALL ".join(f"({b})" for b in branches),
+                    len(fields))
 
-        out = branches[0]
-        for d, b in enumerate(branches[1:], start=1):
-            try:
-                out = out.unionAll(b)
-            except AnalysisException as exc:
-                # ADVICE r12: switching duplicates whose expressions
-                # disagree INCOMPATIBLY on type across branches would
-                # otherwise surface as a raw Spark union
-                # AnalysisException with no Substrait context. Legal
-                # widenings (i32 null vs i64 key in grouping-set shapes)
-                # are Spark's own union coercions and pass through;
-                # non-analysis failures (py4j bridge errors) keep their
-                # own exception rather than a misdiagnosed type fence.
-                t0 = [f.dataType.simpleString()
-                      for f in branches[0].schema.fields]
-                td = [f.dataType.simpleString() for f in b.schema.fields]
-                raise SubstraitError(
-                    "ExpandRel duplicate branches disagree on output "
-                    f"types: branch 0 yields {t0}, branch {d} yields "
-                    f"{td}") from exc
-        return out
-
-    def _rel_exchange(self, body: dict) -> DataFrame:
-        """ExchangeRel → ``DataFrame.repartition`` (see proto.exchange_rel).
-        Rows and ordinals pass through unchanged; only the physical
-        distribution boundary is rebuilt, and Catalyst/AQE remain free to
-        plan around it."""
-        df = self.rel(body["input"])
+    def _rel_exchange(self, body: dict) -> _Rel:
+        """ExchangeRel → a repartition (see proto.exchange_rel). Rows and
+        ordinals pass through unchanged; only the physical distribution
+        boundary is rebuilt, and Catalyst/AQE remain free to plan around
+        it."""
+        inp = self.rel(body["input"])
         if body.get("targets"):
             raise SubstraitError(
                 "ExchangeRel.targets (per-target routing to sub-relations/"
@@ -1180,34 +1239,29 @@ class _Consumer:
                 "drop declared routing semantics"
             )
         n = int(body.get("partitionCount", 0))
+        cols = _fnames(inp.width)
         if "scatterByFields" in body:
             # route through rex() so scatter refs get the same fences as
             # every other selection (reject nested child / outer-rooted /
             # non-structField segments) plus an ordinal bounds check —
             # a foreign plan scattering by a nested reference must error,
             # not silently repartition by the wrong top-level column
-            n_cols = len(df.columns)
-
-            def resolver(i: int, width=n_cols):
+            def resolver(i: int, width=inp.width) -> str:
                 if not (0 <= i < width):
                     raise SubstraitError(
                         f"scatter field ordinal {i} out of range for "
                         f"{width}-column input"
                     )
-                return self._fcol(i)
+                return f"f{i}"
 
-            cols = []
+            keys = []
             for f in body["scatterByFields"].get("fields", []):
                 if "expression" in f and "directReference" not in f:
                     # expression-rooted FieldReference with no segment =
                     # the computed scatter key itself (r13; was a fence —
                     # the last structural fence a real foreign producer's
-                    # PARTITION BY <expr> write would hit). DataFrame
-                    # .repartition accepts arbitrary Columns, so the key
-                    # expression distributes directly — no trailing
-                    # projection/trim needed, and rows/ordinals still
-                    # pass through unchanged.
-                    cols.append(self.rex(f["expression"], resolver))
+                    # PARTITION BY <expr> write would hit)
+                    keys.append(self.rex(f["expression"], resolver))
                 elif "expression" in f:
                     # a segment INTO a computed expression's output needs
                     # nested-struct navigation — same class as the
@@ -1217,20 +1271,33 @@ class _Consumer:
                         "reference segment is not consumable"
                     )
                 else:
-                    cols.append(self.rex({"selection": f}, resolver))
-            if not cols:
+                    keys.append(self.rex({"selection": f}, resolver))
+            if not keys:
                 # legitimately reachable: an empty repeated field has no
                 # wire presence, so {fields: []} decodes as {}
                 raise SubstraitError(
                     "scatter exchange requires at least one field reference"
                 )
-            return df.repartition(n, *cols) if n > 0 else df.repartition(*cols)
+            if n <= 0:
+                return _Rel(_select(cols, _over(inp.sql),
+                                    f" DISTRIBUTE BY {', '.join(keys)}"),
+                            inp.width)
+            # the REPARTITION hint takes column names only: computed keys
+            # ride as helper columns dropped right after
+            named = [k if k in cols else f"__k{i}" for i, k in enumerate(keys)]
+            extra = [f"{k} AS {m}" for k, m in zip(keys, named) if k != m]
+            hint = f"/*+ REPARTITION({n}, {', '.join(named)}) */ "
+            sql = _select(cols + extra, _over(inp.sql), hint=hint)
+            if extra:
+                sql = _select(cols, _over(sql))
+            return _Rel(sql, inp.width)
         if "roundRobin" in body:
             if n <= 0:
                 raise SubstraitError(
                     "round-robin exchange requires an explicit partitionCount"
                 )
-            return df.repartition(n)
+            return _Rel(_select(cols, _over(inp.sql),
+                                hint=f"/*+ REPARTITION({n}) */ "), inp.width)
         if "broadcast" in body:
             # replicate-to-every-partition (r13; was fenced): exactly
             # Spark's broadcast hint — rows/ordinals unchanged, the
@@ -1239,28 +1306,28 @@ class _Consumer:
             # foreign broadcast can OOM where the old fence refused the
             # plan — accepted interop trade, documented with sizing
             # guidance in docs/foreign_producers.md
-            return F.broadcast(df)
+            return _Rel(_select(cols, _over(inp.sql),
+                                hint="/*+ BROADCAST(__t) */ "), inp.width)
         raise SubstraitError(
             "unsupported exchange kind (scatterByFields/roundRobin/"
             "broadcast only; single/multi-bucket per-row routing has no "
             "DataFrame equivalent)"
         )
 
-    def _rel_extensionLeaf(self, body: dict) -> DataFrame:
+    def _rel_extensionLeaf(self, body: dict) -> _Rel:
         """ExtensionLeafRel dispatch by the detail's Any @type."""
         t = body.get("detail", {}).get("@type", "")
         if t.endswith("RangeRel"):
             d = body["detail"]
-            kwargs = {}
+            args = [int(d.get("start", 0)), int(d.get("end", 0)),
+                    int(d.get("step", 1))]
             if "numSlices" in d:
-                kwargs["numPartitions"] = int(d["numSlices"])
-            df = self.spark.range(int(d.get("start", 0)),
-                                  int(d.get("end", 0)),
-                                  int(d.get("step", 1)), **kwargs)
-            return df.toDF("f0")
+                args.append(int(d["numSlices"]))
+            return _Rel(f"SELECT id AS f0 FROM range({', '.join(map(str, args))})",
+                        1)
         raise SubstraitError(f"unknown leaf extension relation type {t!r}")
 
-    def _rel_extensionSingle(self, body: dict) -> DataFrame:
+    def _rel_extensionSingle(self, body: dict) -> _Rel:
         """ExtensionSingleRel dispatch by the detail's Any @type."""
         t = body.get("detail", {}).get("@type", "")
         if t.endswith("GenerateRel"):
@@ -1271,44 +1338,59 @@ class _Consumer:
             return self._local_sort(body)
         raise SubstraitError(f"unknown extension relation type {t!r}")
 
-    def _local_sort(self, body: dict) -> DataFrame:
-        """LocalSortRel → ``sortWithinPartitions`` (r10): the partition-
-        local sort Catalyst emits for sortWithinPartitions / SORT BY and
-        under randomSplit — consuming as a global orderBy would change
-        both the plan (range shuffle) and, under sampling, the rows."""
-        df = self.rel(body["input"])
-        keys = self._sort_keys(df, body["detail"].get("sorts", []))
+    def _local_sort(self, body: dict) -> _Rel:
+        """LocalSortRel → ``SORT BY`` (r10): the partition-local sort
+        Catalyst emits for sortWithinPartitions / SORT BY and under
+        randomSplit — consuming as a global ORDER BY would change both the
+        plan (range shuffle) and, under sampling, the rows."""
+        inp = self.rel(body["input"])
+        keys = self._sort_keys(inp.width, body["detail"].get("sorts", []))
         if not keys:
             raise SubstraitError("LocalSortRel requires at least one key")
-        return df.sortWithinPartitions(*keys)
+        return _Rel(_select(_fnames(inp.width), _over(inp.sql),
+                            f" SORT BY {', '.join(keys)}"), inp.width)
 
-    def _sample(self, body: dict) -> DataFrame:
-        """SampleRel → ``DataFrame.sample`` (see proto.sample_rel). Columns
-        and ordinals pass through unchanged."""
+    def _sample(self, body: dict) -> _Rel:
+        """SampleRel → ``TABLESAMPLE (p PERCENT) REPEATABLE (seed)`` (see
+        proto.sample_rel); columns and ordinals pass through unchanged.
+        TABLESAMPLE has no with-replacement form, takes only non-negative
+        seeds, and divides its percentage by 100 — when it cannot spell
+        the sample exactly, the sampled subtree is built with
+        ``DataFrame.sample`` and spliced in through spark.sql's DataFrame
+        keyword form."""
         d = body["detail"]
-        df = self.rel(body["input"])
+        inp = self.rel(body["input"])
         lb = float(d.get("lowerBound", 0.0))
         if lb != 0.0:
             raise SubstraitError(
                 "SampleRel with lowerBound != 0 has no DataFrame.sample "
                 "equivalent (Spark SQL TABLESAMPLE always produces 0)"
             )
-        return df.sample(
-            withReplacement=bool(d.get("withReplacement", False)),
-            fraction=float(d.get("upperBound", 0.0)),
-            seed=int(d.get("seed", 0)),
-        )
+        replace = bool(d.get("withReplacement", False))
+        fraction = float(d.get("upperBound", 0.0))
+        seed = int(d.get("seed", 0))
+        cols = _fnames(inp.width)
+        percent = _percent(fraction)
+        if not replace and percent is not None and seed >= 0:
+            return _Rel(_select(cols, f"({inp.sql}) TABLESAMPLE ({percent} "
+                                      f"PERCENT) REPEATABLE ({seed}) AS __t"),
+                        inp.width)
+        name = f"__df{len(self._frames)}"
+        self._frames[name] = self._probe(inp.sql).sample(
+            withReplacement=replace, fraction=fraction, seed=seed)
+        return _Rel(_select(cols, f"\x00{name}\x00 AS __t"), inp.width)
 
-    def _generate(self, body: dict) -> DataFrame:
+    def _generate(self, body: dict) -> _Rel:
         """GenerateRel (explode/posexplode) — see proto.generate_rel for the
         layout. Output = requiredChildIndices columns ++ generated columns."""
         detail = body["detail"]
-        df = self.rel(body["input"])
-        resolver = self._fcol
+        inp = self.rel(body["input"])
+        resolver = self._fields(inp.width)
         arg = self.rex(detail["argument"], resolver)
-        req_idx = detail.get("requiredChildIndices", [])
-        req = [self._fcol(i).alias(f"f{j}") for j, i in enumerate(req_idx)]
+        req = [f"{resolver(int(i))} AS f{j}"
+               for j, i in enumerate(detail.get("requiredChildIndices", []))]
         n_out = int(detail.get("generatorOutputs", 1))
+        width = len(req) + n_out
         if detail.get("mode") == "replicaterows":
             # Catalyst's ReplicateRows (INTERSECT/EXCEPT ALL): emit each
             # row `argument` times. array_repeat's count ≤ 0 yields an
@@ -1323,33 +1405,35 @@ class _Consumer:
                 raise SubstraitError(
                     "replicaterows with outer=true is not supported "
                     "(inner drop-on-nonpositive semantics only)")
-            cols = [self.rex(a, resolver) for a in
-                    detail.get("arguments", [])]
+            cols = [self.rex(a, resolver) for a in detail.get("arguments", [])]
             if len(cols) != n_out:
                 raise SubstraitError(
                     f"replicaterows carries {len(cols)} column "
                     f"expressions but declares {n_out} outputs")
-            out = [c.alias(f"f{len(req) + j}") for j, c in enumerate(cols)]
-            rep = F.explode(
-                F.array_repeat(F.lit(1), arg.cast("int"))).alias("__rep")
-            return df.select(*req, *out, rep).drop("__rep")
+            rep = _select(
+                req + [f"{c} AS f{len(req) + j}" for j, c in enumerate(cols)]
+                + [f"explode(array_repeat(1, CAST({arg} AS INT))) AS __rep"],
+                _over(inp.sql))
+            return _Rel(_select(_fnames(width), _over(rep)), width)
         fns = {
-            ("explode", False): F.explode,
-            ("explode", True): F.explode_outer,
-            ("posexplode", False): F.posexplode,
-            ("posexplode", True): F.posexplode_outer,
+            ("explode", False): "explode",
+            ("explode", True): "explode_outer",
+            ("posexplode", False): "posexplode",
+            ("posexplode", True): "posexplode_outer",
         }
         fn = fns.get((detail.get("mode"), bool(detail.get("outer"))))
         if fn is None:
             raise SubstraitError(
                 f"unsupported generator mode {detail.get('mode')!r}"
             )
-        gen = fn(arg).alias(*[f"f{len(req) + j}" for j in range(n_out)])
-        return df.select(*req, gen)
+        names = _fnames(width)[len(req):]
+        alias = names[0] if len(names) == 1 else f"({', '.join(names)})"
+        return _Rel(_select(req + [f"{fn}({arg}) AS {alias}"], _over(inp.sql)),
+                    width)
 
     # -- expressions --------------------------------------------------------
 
-    def rex(self, e: dict, resolver) -> Column:
+    def rex(self, e: dict, resolver) -> str:
         kind = proto.expr_kind(e)
         body = e[kind]
         if kind == "selection":
@@ -1383,7 +1467,7 @@ class _Consumer:
         if kind == "scalarFunction":
             name = self._fn_name(body["functionReference"])
             raw = [a["value"] for a in body.get("arguments", [])]
-            if name in ops.HOF_CONSUME:
+            if name in ops.HOF_ARITY:
                 return self._hof(name, raw, resolver)
             if name == "lambda_var":
                 return self._lambda_var(raw)
@@ -1392,7 +1476,7 @@ class _Consumer:
                     "lambda is only consumable as a direct argument of a "
                     "higher-order function")
             if name == "round" and len(raw) == 2:
-                # F.round needs a python-int scale; pull it from the literal
+                # round's scale must be a constant: pull it from the literal
                 lit = raw[1].get("literal", {})
                 scale = next(
                     (int(lit[k]) for k in ("i32", "i64", "i16", "i8") if k in lit),
@@ -1400,13 +1484,13 @@ class _Consumer:
                 )
                 if scale is None:
                     raise SubstraitError("round scale must be an integer literal")
-                return F.round(self.rex(raw[0], resolver), scale)
+                return f"round({self.rex(raw[0], resolver)}, {scale})"
             if name == "string_split" and len(raw) == 2:
                 # LITERAL-delimiter split (functions_string.yaml; Catalyst
                 # StringSplitSQL, split_part's array source). Spark has no
-                # public literal-split builder, so rebuild as regex split
-                # over the \Q..\E-quoted delimiter — value-identical for
-                # every delimiter that cannot close the quote itself.
+                # literal-split function, so rebuild as regex split over
+                # the \Q..\E-quoted delimiter — value-identical for every
+                # delimiter that cannot close the quote itself.
                 sep = raw[1].get("literal", {}).get("string")
                 if not sep:
                     raise SubstraitError(
@@ -1416,26 +1500,25 @@ class _Consumer:
                     raise SubstraitError(
                         r"string_split delimiter containing \E cannot be "
                         "regex-quoted for the rebuild")
-                return F.split(self.rex(raw[0], resolver),
-                               "\\Q" + sep + "\\E", -1)
+                return (f"split({self.rex(raw[0], resolver)}, "
+                        f"{_str(chr(92) + 'Q' + sep + chr(92) + 'E')}, -1)")
             if name == "concat_ws" and raw:
-                # F.concat_ws takes the separator as a python str
                 sep = raw[0].get("literal", {}).get("string")
                 if sep is None:
                     raise SubstraitError("concat_ws separator must be a string literal")
-                return F.concat_ws(sep, *[self.rex(a, resolver) for a in raw[1:]])
-            args = [self.rex(a, resolver) for a in raw]
-            return ops.apply_scalar(name, args)
+                return "concat_ws(" + ", ".join(
+                    [_str(sep)] + [self.rex(a, resolver) for a in raw[1:]]) + ")"
+            return ops.scalar_sql(name, [self.rex(a, resolver) for a in raw])
         if kind == "literal":
-            return self._literal_cached(body)
+            return _literal(body)
         if kind == "ifThen":
             return self._if_then(body, resolver)
         if kind == "cast":
-            col = self.rex(body["input"], resolver)
+            arg = self.rex(body["input"], resolver)
             spark_type = substrait_type_to_spark(body["type"])
-            if body.get("failureBehavior") == "FAILURE_BEHAVIOR_RETURN_NULL":
-                return col.try_cast(spark_type)
-            return col.cast(spark_type)
+            fn = "TRY_CAST" if body.get("failureBehavior") == \
+                "FAILURE_BEHAVIOR_RETURN_NULL" else "CAST"
+            return f"{fn}({arg} AS {spark_type})"
         if kind == "singularOrList":
             v = self.rex(body["value"], resolver)
             opts = [self.rex(o, resolver) for o in body.get("options", [])]
@@ -1445,32 +1528,31 @@ class _Consumer:
                 raise SubstraitError(
                     "singularOrList requires at least one option"
                 )
-            return reduce(lambda a, b: a | b, [v == o for o in opts])
+            out = f"({v} = {opts[0]})"
+            for o in opts[1:]:
+                out = f"({out} OR ({v} = {o}))"
+            return out
         if kind == "subquery":
-            import json as _json
-
-            name = self._sq_map.get(_json.dumps(e, sort_keys=True))
+            name = self._sq_map.get(json.dumps(e, sort_keys=True))
             if name is None:
                 raise SubstraitError(
                     "scalar subquery supported only inside project/filter "
                     "expressions"
                 )
-            return F.col(name)
+            return name
         if kind == "nested":
             if "list" in body:
-                return F.array(*[self.rex(v, resolver)
-                                 for v in body["list"].get("values", [])])
+                return "array(" + ", ".join(
+                    self.rex(v, resolver)
+                    for v in body["list"].get("values", [])) + ")"
             raise SubstraitError("only Nested.List is supported")
         raise SubstraitError(f"unsupported expression {kind} (consumer.rs:611-613)")
 
-    def _hof(self, name: str, raw: list[dict], resolver) -> Column:
+    def _hof(self, name: str, raw: list[dict], resolver) -> str:
         """Higher-order function consume (r10): args are positional —
-        Columns for data arguments, and for each ``lambda(n, body)``
-        argument a rebuilt fixed-arity python function, handed to the
-        matching pyspark.sql.functions builder (ops.HOF_CONSUME). The
-        builder invokes the function immediately with its bound lambda-
-        variable Columns, so the body is consumed inside the frame it
-        closes over — nested lambdas stack naturally."""
+        expressions for data arguments, and for each ``lambda(n, body)``
+        argument a Spark SQL lambda whose body is consumed inside the
+        frame of its parameters, so nested lambdas stack naturally."""
         shape = ops.HOF_LAMBDA_SHAPE[name]
         args = []
         for i, a in enumerate(raw):
@@ -1485,16 +1567,13 @@ class _Consumer:
                 args.append(self._consume_lambda(fn, resolver, allowed))
             else:
                 args.append(self.rex(a, resolver))
-        try:
-            return ops.HOF_CONSUME[name](*args)
-        except TypeError as ex:
-            # arity/shape is pre-validated above, so a TypeError here is
-            # most likely an internal bug — keep the original chain
+        if len(args) not in ops.HOF_ARITY[name]:
             raise SubstraitError(
                 f"higher-order function {name!r}: bad call shape "
-                f"({ex})") from ex
+                f"({len(args)} arguments; takes {sorted(ops.HOF_ARITY[name])})")
+        return f"{name}({', '.join(args)})"
 
-    def _consume_lambda(self, fn: dict, resolver, allowed: set[int]):
+    def _consume_lambda(self, fn: dict, resolver, allowed: set[int]) -> str:
         args = [a["value"] for a in fn.get("arguments", [])]
         if len(args) != 2:
             raise SubstraitError(
@@ -1502,32 +1581,24 @@ class _Consumer:
         n = args[0].get("literal", {}).get("i32")
         if n is None:
             raise SubstraitError("lambda n_params must be an i32 literal")
-        n, bexpr = int(n), args[1]
+        n = int(n)
         if n not in allowed:
-            # fail here, not later as a JVM AnalysisException mid-build
             raise SubstraitError(
                 f"lambda with {n} parameter(s) where this position "
                 f"allows {sorted(allowed)}")
+        if not 1 <= n <= 3:
+            raise SubstraitError(
+                f"lambda with {n} parameters (Spark lambdas take 1-3)")
+        params = self._lambda_names(n)
+        self._lambda_stack.append(params)
+        try:
+            body = self.rex(args[1], resolver)
+        finally:
+            self._lambda_stack.pop()
+        head = params[0] if n == 1 else f"({', '.join(params)})"
+        return f"{head} -> {body}"
 
-        def run(cols):
-            self._lambda_stack.append(list(cols))
-            try:
-                return self.rex(bexpr, resolver)
-            finally:
-                self._lambda_stack.pop()
-
-        # pyspark's _create_lambda inspects the signature, so the arity
-        # must be structural, not *args
-        if n == 1:
-            return lambda a: run([a])
-        if n == 2:
-            return lambda a, b: run([a, b])
-        if n == 3:
-            return lambda a, b, c: run([a, b, c])
-        raise SubstraitError(
-            f"lambda with {n} parameters (Spark lambdas take 1-3)")
-
-    def _lambda_var(self, raw: list[dict]) -> Column:
+    def _lambda_var(self, raw: list[dict]) -> str:
         if len(raw) != 2:
             raise SubstraitError(
                 "lambda_var encoding is lambda_var(depth: i32, index: i32)")
@@ -1546,7 +1617,7 @@ class _Consumer:
                 f"({len(self._lambda_stack)} frame(s) open)")
         return self._lambda_stack[-1 - depth][idx]
 
-    def _if_then(self, body: dict, resolver) -> Column:
+    def _if_then(self, body: dict, resolver) -> str:
         ifs = list(body.get("ifs", []))
         if not ifs:
             raise SubstraitError("ifThen with no branches")
@@ -1556,59 +1627,46 @@ class _Consumer:
         if "then" not in ifs[0]:
             base = self.rex(ifs[0]["if"], resolver)
             ifs = ifs[1:]
-        col = None
+        parts = ["CASE"]
         for clause in ifs:
             pred = self.rex(clause["if"], resolver)
             if base is not None:
-                pred = base == pred
-            val = self.rex(clause["then"], resolver)
-            col = F.when(pred, val) if col is None else col.when(pred, val)
+                pred = f"({base} = {pred})"
+            parts.append(f"WHEN {pred} THEN {self.rex(clause['then'], resolver)}")
         if "else" in body:
-            col = col.otherwise(self.rex(body["else"], resolver))
-        return col
+            parts.append(f"ELSE {self.rex(body['else'], resolver)}")
+        return " ".join(parts) + " END"
 
 
-def _literal_py(body: dict):
-    """Bare Literal message (a virtual-table Struct field) → Python value of
-    the shape ``spark.createDataFrame`` expects for the matching type."""
-    kinds = [k for k in body if k not in ("nullable", "typeVariationReference")]
-    if len(kinds) != 1:
-        raise SubstraitError(f"bad virtual-table literal {body}")
-    kind, v = kinds[0], body[kinds[0]]
-    if kind == "null":
+def _percent(fraction: float) -> str | None:
+    """TABLESAMPLE percentage text that Spark divides back to exactly
+    ``fraction``, or None when no nearby decimal does."""
+    if not 0.0 <= fraction <= 1.0:
         return None
-    if kind in ("i8", "i16", "i32", "i64"):
-        return int(v)
-    if kind in ("fp32", "fp64"):
-        return float(v)
-    if kind == "boolean":
-        return bool(v)
-    if kind == "string":
-        return str(v)
-    if kind == "binary":
-        return bytearray(base64.b64decode(v))
-    if kind == "date":
-        return _EPOCH_DATE + datetime.timedelta(days=int(v))
-    if kind == "timestamp":
-        # NTZ wall-clock micros: a NAIVE datetime is exactly right —
-        # TimestampNTZType.toInternal is calendar arithmetic on the naive
-        # value, no timezone involved
-        return (datetime.datetime(1970, 1, 1)
-                + datetime.timedelta(microseconds=int(v)))
-    if kind == "timestampTz":
-        # UTC-instant micros: MUST be tz-aware — TimestampType.toInternal
-        # pushes a naive datetime through time.mktime, i.e. the driver's
-        # OS timezone (NOT spark.sql.session.timeZone), which shifted
-        # every value by the UTC offset on a non-UTC machine (verified
-        # +5 h under TZ=America/New_York). A tz-aware datetime goes
-        # through calendar.timegm instead: exact.
-        return (datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
-                + datetime.timedelta(microseconds=int(v)))
-    if kind == "decimal":
-        unscaled = int.from_bytes(base64.b64decode(v["value"]), "little",
-                                  signed=True)
-        return decimal.Decimal(unscaled).scaleb(-int(v.get("scale", 0)))
-    raise SubstraitError(f"unsupported virtual-table literal kind {kind!r}")
+    p = fraction * 100.0
+    for cand in (p, math.nextafter(p, math.inf), math.nextafter(p, -math.inf)):
+        text = format(decimal.Decimal(repr(cand)), "f")
+        if float(text) / 100.0 == fraction:
+            return text
+    return None
+
+
+_VIRTUAL_KINDS = frozenset((
+    "null", "i8", "i16", "i32", "i64", "fp32", "fp64", "boolean", "string",
+    "binary", "date", "timestamp", "timestampTz", "decimal"))
+
+
+def _virtual_literal(body: dict) -> str:
+    """A virtual-table field (bare Literal message) → SQL literal."""
+    present = [k for k in body if k not in ("nullable", "typeVariationReference")]
+    if len(present) != 1:
+        raise SubstraitError(f"bad virtual-table literal {body}")
+    if present[0] not in _VIRTUAL_KINDS:
+        raise SubstraitError(
+            f"unsupported virtual-table literal kind {present[0]!r}")
+    if present[0] == "null":
+        return "NULL"
+    return _literal({present[0]: body[present[0]]})
 
 
 def _scalar_literal(e: dict):
@@ -1629,6 +1687,20 @@ def _scalar_literal(e: dict):
     raise SubstraitError(f"unsupported literal default {kind!r}")
 
 
+def _py_literal(v) -> str:
+    """Untyped SQL literal of a Python value, typed as Spark types a Python
+    value (int → int or bigint by magnitude, float → double)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return _double(v)
+    return _str(str(v))
+
+
 def _int_literal(e: dict, what: str) -> int:
     lit = e.get("literal", {})
     for k in ("i32", "i64", "i16", "i8"):
@@ -1637,53 +1709,61 @@ def _int_literal(e: dict, what: str) -> int:
     raise SubstraitError(f"{what} must be an integer literal, got {e}")
 
 
-def _frame_bound(b: dict | None, lower: bool):
-    from pyspark.sql.window import Window as W
-
-    if not b:
-        return W.unboundedPreceding if lower else W.unboundedFollowing
-    if "unbounded" in b:
-        return W.unboundedPreceding if lower else W.unboundedFollowing
+def _frame_bound(b: dict | None, lower: bool) -> str:
+    if not b or "unbounded" in b:
+        return "UNBOUNDED PRECEDING" if lower else "UNBOUNDED FOLLOWING"
     if "currentRow" in b:
-        return W.currentRow
+        return "CURRENT ROW"
     if "preceding" in b:
-        return -int(b["preceding"]["offset"])
-    if "following" in b:
-        return int(b["following"]["offset"])
-    raise SubstraitError(f"unsupported frame bound {b}")
+        offset = -int(b["preceding"]["offset"])
+    elif "following" in b:
+        offset = int(b["following"]["offset"])
+    else:
+        raise SubstraitError(f"unsupported frame bound {b}")
+    if offset == 0:
+        return "CURRENT ROW"
+    return f"{-offset} PRECEDING" if offset < 0 else f"{offset} FOLLOWING"
 
 
-def _literal_column(body: dict) -> Column:
-    """Substrait literal → Spark Column (≡ consumer.rs:563-610 + typed nulls
-    consumer.rs:617-639)."""
+def _double(v: float) -> str:
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(v) + "D"  # repr keeps the sign of -0.0
+
+
+_INT_TYPES = {"i8": "TINYINT", "i16": "SMALLINT", "i32": "INT", "i64": "BIGINT"}
+
+
+def _literal(body: dict) -> str:
+    """Substrait literal → Spark SQL literal (≡ consumer.rs:563-610 + typed
+    nulls consumer.rs:617-639). Each value is its own text, so equal-
+    comparing values (0.0 and -0.0) never share one."""
     kinds = [k for k in body if k != "nullable"]
     if len(kinds) != 1:
         raise SubstraitError(f"bad literal {body}")
     kind, v = kinds[0], body[kinds[0]]
     if kind == "boolean":
-        return F.lit(bool(v))
-    if kind == "i8":
-        return F.lit(int(v)).cast("tinyint")
-    if kind == "i16":
-        return F.lit(int(v)).cast("smallint")
-    if kind == "i32":
-        return F.lit(int(v)).cast("int")
-    if kind == "i64":
-        return F.lit(int(v)).cast("bigint")
+        return "true" if v else "false"
+    if kind in ("i8", "i16", "i32", "i64"):
+        # a cast, never a bare integer: GROUP BY / ORDER BY would read
+        # a bare one as a select-list ordinal
+        return f"CAST({int(v)} AS {_INT_TYPES[kind]})"
     if kind == "fp32":
-        return F.lit(float(v)).cast("float")
+        return f"CAST({_double(float(v))} AS FLOAT)"
     if kind == "fp64":
-        return F.lit(float(v)).cast("double")
+        return _double(float(v))
     if kind == "string":
-        return F.lit(str(v))
+        return _str(str(v))
     if kind == "binary":
-        return F.lit(bytearray(base64.b64decode(v)))
+        return f"X'{base64.b64decode(v).hex()}'"
     if kind == "date":  # epoch days (consumer.rs:579-581)
-        return F.lit(_EPOCH_DATE + datetime.timedelta(days=int(v)))
+        return f"DATE '{(_EPOCH_DATE + datetime.timedelta(days=int(v))).isoformat()}'"
     if kind == "intervalYearToMonth":
         # calendar-shift interval (r11): native make_ym_interval rebuild
-        return F.make_ym_interval(F.lit(int(v.get("years", 0))),
-                                  F.lit(int(v.get("months", 0))))
+        return (f"make_ym_interval({int(v.get('years', 0))}, "
+                f"{int(v.get('months', 0))})")
     if kind == "intervalDayToSecond":
         # day-time interval (r11): rebuilt via make_dt_interval so
         # timestamp ± interval re-resolves natively. The spec's
@@ -1695,22 +1775,20 @@ def _literal_column(body: dict) -> Column:
                 "intervalDayToSecond precision/subseconds mode is not "
                 "consumable (microseconds form only)")
         secs = (decimal.Decimal(int(v.get("seconds", 0)))
-                + decimal.Decimal(int(v.get("microseconds", 0)))
-                .scaleb(-6))
-        return F.make_dt_interval(
-            F.lit(int(v.get("days", 0))), F.lit(0), F.lit(0),
-            F.lit(secs).cast("decimal(18,6)"))
+                + decimal.Decimal(int(v.get("microseconds", 0))).scaleb(-6))
+        return (f"make_dt_interval({int(v.get('days', 0))}, 0, 0, "
+                f"CAST('{secs}' AS DECIMAL(18,6)))")
     if kind == "timestampTz":  # epoch micros, UTC instant
-        return F.timestamp_micros(F.lit(int(v)))
+        return f"timestamp_micros({int(v)})"
     if kind == "timestamp":  # wall-clock micros (session tz pinned to UTC)
-        return F.timestamp_micros(F.lit(int(v))).cast("timestamp_ntz")
+        return f"CAST(timestamp_micros({int(v)}) AS TIMESTAMP_NTZ)"
     if kind == "decimal":
         # 16-byte LE two's-complement unscaled (consumer.rs:588-594
         # i128::from_le_bytes)
         unscaled = int.from_bytes(base64.b64decode(v["value"]), "little", signed=True)
         p, s = int(v["precision"]), int(v.get("scale", 0))
-        d = decimal.Decimal(unscaled).scaleb(-s)
-        return F.lit(str(d)).cast(f"decimal({p},{s})")
+        return f"CAST('{decimal.Decimal(unscaled).scaleb(-s)}' AS DECIMAL({p},{s}))"
     if kind == "null":
-        return F.lit(None).cast(substrait_type_to_spark(v))
+        return f"CAST(NULL AS {substrait_type_to_spark(v)})"
     raise SubstraitError(f"unsupported literal kind {kind!r} (consumer.rs:604-609)")
+
